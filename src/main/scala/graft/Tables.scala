@@ -93,15 +93,19 @@ object Ckpt {
     * AQE-class sizing instead of a harness constant. */
   private val TargetBytesPerPartition = 64L << 20
   private val MaxWidth = 1 << 20
-  private def leafBytes(df: org.apache.spark.sql.DataFrame): Long = {
-    val sum = df.queryExecution.optimizedPlan.collectLeaves()
-      .map(_.stats.sizeInBytes).sum
-    if (sum.isValidLong) sum.toLong else Long.MaxValue
+  /** Summed leaf sizes, or None when any leaf has no estimate: a leaf
+    * without statistics (an RDD-backed frame, or a checkpoint whose
+    * estimate hit the cap) reports the Long.MaxValue sentinel, which is
+    * not a size. */
+  private def leafBytes(df: org.apache.spark.sql.DataFrame): Option[BigInt] = {
+    val sizes = df.queryExecution.optimizedPlan.collectLeaves()
+      .map(_.stats.sizeInBytes)
+    if (sizes.exists(_ >= Long.MaxValue)) None else Some(sizes.sum)
   }
-  private def volumeWidth(floor: Int, df: org.apache.spark.sql.DataFrame): Int = {
-    val byBytes = leafBytes(df) / TargetBytesPerPartition
-    math.max(floor, math.min(byBytes, MaxWidth.toLong).toInt)
-  }
+  private def volumeWidth(floor: Int, df: org.apache.spark.sql.DataFrame): Int =
+    leafBytes(df).fold(floor) { bytes =>
+      math.max(floor, (bytes / TargetBytesPerPartition).min(MaxWidth).toInt)
+    }
   def wide(df: org.apache.spark.sql.DataFrame): Int =
     volumeWidth(wide(df.sparkSession), df)
   def textPar(df: org.apache.spark.sql.DataFrame): Int =

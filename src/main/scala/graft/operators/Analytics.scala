@@ -6444,8 +6444,8 @@ object Analytics {
     * n×32 d² relation (checkpointed — rounds re-read it, never the
     * corpus); Σ d² is BIGINT-safe to ~32k vectors at 64 dims
     * (n·64·2^42), divide-first per-x milli beyond. Driver state is the
-    * 6-row chosen list + one 32-row argmin collect per round (O(K), the
-    * kcenter class). */
+    * 6-row chosen list; each round's pick is observed on its checkpoint
+    * (O(K), the kcenter class). */
   def simFacilityLocation(s: SparkSession, dir: String): DataFrame = {
     val k = 6
     val INF = 1L << 62
@@ -6477,9 +6477,12 @@ object Analytics {
     // ONE job per round materializes both the pick and the update
     // (was: collect + checkpoint = two). Exclusion stays a literal isin
     // over the driver-known picks — a relational anti-join would add a
-    // stage per previous round.
+    // stage per previous round. A pool with fewer than k candidates
+    // leaves a round with no winner: its observed min is null, a named
+    // error.
     val chosen = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-    for (r <- 0 until k) {
+    graft.Fixpoint.converge("simFacilityLocation", k, fuse = 1,
+        raise = "the candidate pool") { (r, _) =>
       val picked = chosen.map(_._2)
       val base = d2.join(cur.select("vec_id", "mind"), Seq("vec_id"))
         .groupBy("cand").agg(sum(least(col("mind"), col("d2"))).as("tot"))
@@ -6487,21 +6490,15 @@ object Analytics {
                  else base.filter(!col("cand").isin(picked.toSeq: _*)))
         .orderBy("tot", "cand").limit(1)
         .select(col("cand").as("wc"), col("tot").as("wt"))
-      val obs = org.apache.spark.sql.Observation(s"fl_round_$r")
-      cur = cur.select("vec_id", "mind")
-        .join(d2, Seq("vec_id"))
-        .join(broadcast(win), col("cand") === col("wc"))
-        .select(col("vec_id"), least(col("mind"), col("d2")).as("mind"),
-          col("wc"), col("wt"))
-        .observe(obs, min(col("wc")).as("wc"), min(col("wt")).as("wt"))
-        .transform(graft.Ckpt.capped)
-      val (wcV, wtV) = Graphs.awaitMetric(obs) match {
-        case Some(m) => (m("wc").asInstanceOf[Long], m("wt").asInstanceOf[Long])
-        case None =>
-          val row = cur.limit(1).select("wc", "wt").head()
-          (row.getLong(0), row.getLong(1))
-      }
-      chosen += ((r.toLong, wcV, wtV))
+      val (next, m) = graft.Fixpoint.observe(cur.select("vec_id", "mind")
+          .join(d2, Seq("vec_id"))
+          .join(broadcast(win), col("cand") === col("wc"))
+          .select(col("vec_id"), least(col("mind"), col("d2")).as("mind"),
+            col("wc"), col("wt")),
+        s"fl_round_$r", min(col("wc")).as("wc"), min(col("wt")).as("wt"))
+      cur = next
+      chosen += ((r.toLong, m("wc").asInstanceOf[Long], m("wt").asInstanceOf[Long]))
+      chosen.size == k
     }
     import comps.sparkSession.implicits._
     chosen.toSeq.toDF("round", "center_vec_id", "total_cost_fp")

@@ -4,54 +4,52 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Distributed connected components — the clustering step every near-dup
-  * pipeline needs after pair generation: pair lists say WHICH documents
-  * collide, but dedup keeps one representative per transitive CLUSTER
-  * (a~b, b~c ⇒ keep one of {a,b,c}).
+/** Graph operators over two-column edge lists: clustering (connected
+  * components, label propagation), density (triangles, k-core, truss,
+  * onion layers), reach (BFS, landmark BFS, ancestor closure), centrality
+  * (pagerank, harmonic) and spanning forests (Borůvka). They are the
+  * clustering step every near-dup pipeline needs after pair generation:
+  * pair lists say WHICH documents collide, but dedup keeps one
+  * representative per transitive CLUSTER (a~b, b~c ⇒ keep one of
+  * {a,b,c}).
   *
-  * Iterative min-label propagation over the symmetrized edge list: every
-  * node starts labeled with itself and repeatedly takes the minimum label
-  * in its closed neighborhood until a fixpoint. Each round is two
-  * shuffles (edge⋈label hash join + min aggregate), and — the part naive
-  * Spark loops get wrong — each round `localCheckpoint`s the new label
-  * table: without cutting lineage the logical plan doubles per iteration
-  * and the job dies on plan/stack size long before data size matters.
-  * Rounds needed = graph diameter, which for near-dup graphs is tiny
-  * (candidate generation emits near-cliques); the iteration cap guards
-  * pathological chains. The per-round driver action is one aggregated
-  * Boolean (did any label change) off the already-materialized
-  * checkpoint — no row data ever reaches the driver.
+  * Every loop that checkpoints per round runs through [[graft.Fixpoint]],
+  * which owns fusion depth, the checkpoint, the observed convergence read
+  * and the loud failure at the round cap. Fixed-round loops (k-core,
+  * truss, onion, BFS, landmark BFS, ancestor closure) are deterministic
+  * on both engines; all but ancestor closure have oracles that unroll
+  * the same rounds as chained CTEs. Convergence loops (both CC
+  * algorithms, Borůvka) read one aggregate observed on each checkpoint
+  * action, so no row data reaches the driver.
   */
 object Graphs {
   type Q = (SparkSession, String) => DataFrame
 
-  /** Every checkpoint in this file routes through the stats-capped
-    * variant: plain localCheckpoint carries the origin plan's Statistics
-    * onto the new leaf, and the iterative loops here (CC, Borůvka) join
-    * the previous round's checkpoint several times per round, so the
-    * carried sizeInBytes estimate compounds GEOMETRICALLY — at ~14
-    * Borůvka rounds it is a ~10^6-digit BigInt and Catalyst planning
-    * hangs for minutes inside BigInteger multiplication (ScaleSpec's
-    * 16k-node Borůvka probe, r9). The cap is a passthrough whenever the
-    * carried stats are sane (≤ Long.MaxValue), so non-loop sites are
-    * unchanged. See [[org.apache.spark.sql.GraftStatsCheckpoint]]. */
+  /** Every checkpoint in this file is the stats-capped one: see
+    * [[graft.Ckpt]] for why plain localCheckpoint is unsafe in loops. */
   private def ckpt(df: DataFrame): DataFrame = graft.Ckpt.capped(df)
 
-  /** obs.get with a 10 s ceiling; None on timeout. Each call gets its
-    * own single-thread DAEMON executor, shut down on exit — parking the
-    * waiter on the fixed-size global EC would leak one pool thread per
-    * timeout, and after #cores timeouts every later call (even ones
-    * whose metric DID fire) would starve behind the dead waiters. */
-  private[operators] def awaitMetric(obs: org.apache.spark.sql.Observation): Option[Map[String, Any]] = {
-    import scala.concurrent.{Await, ExecutionContext, Future, TimeoutException}
-    import scala.concurrent.duration._
-    val exec = java.util.concurrent.Executors.newSingleThreadExecutor(r => {
-      val t = new Thread(r, "graft-await-metric"); t.setDaemon(true); t
-    })
-    try Some(Await.result(
-      Future(obs.get)(ExecutionContext.fromExecutorService(exec)), 10.seconds))
-    catch { case _: TimeoutException => None }
-    finally exec.shutdownNow() // abandoned waiter dies with its own thread
+  /** Canonical undirected edges (u < v): direction, duplicates and
+    * self-loops dropped, checkpointed because every caller references
+    * the list more than once. */
+  private def canonical(edges: DataFrame): DataFrame =
+    edges.toDF("x", "y")
+      .select(least(col("x"), col("y")).as("u"),
+        greatest(col("x"), col("y")).as("v"))
+      .filter(col("u") =!= col("v")).distinct()
+      .transform(ckpt)
+
+  /** Distinct arcs (a, b) in both directions, self-loops dropped.
+    * `cutRaw` checkpoints the raw edges first, so the union's two legs do
+    * not each replay an expensive upstream pair plan; labelPropagation
+    * and bfsLayers measured that cut as a loss (0.85x, 0.86x: their legs
+    * share the pair plan's exchanges through ReusedExchange). */
+  private def symmetrize(edges: DataFrame, cutRaw: Boolean): DataFrame = {
+    val raw = edges.toDF("x", "y").filter(col("x") =!= col("y"))
+    val e = if (cutRaw) ckpt(raw) else raw
+    e.select(col("x").as("a"), col("y").as("b"))
+      .union(e.select(col("y").as("a"), col("x").as("b")))
+      .distinct()
   }
 
   /** (node, cluster_id) for every node in `edges`, cluster_id = min node
@@ -78,26 +76,11 @@ object Graphs {
       s"unknown connectedComponents algo '$other' (min-label | big-star)")
   }
 
-  /** Rounds materialized per checkpoint in the iterative loops below
-    * (r15 driver-latency fusion): at bench SF every per-round
-    * plan+codegen+AQE-stage round-trip costs ~0.1-0.2 s of pure DRIVER
-    * latency while the per-round executor work on the tiny pair graphs
-    * is milliseconds, so two synchronous rounds composed into ONE
-    * submitted plan halve the round-trips. Two, not more: each round
-    * references the previous relation TWICE (join source + outer base),
-    * so a fused body holds 2^f copies of the checkpoint leaf — f = 2
-    * keeps the plan linear-ish while f ≥ 3 pays more planning than it
-    * saves (probed). The composed algebra is UNCHANGED — the same
-    * synchronous rounds execute, only the materialization boundary
-    * moves. */
-  private val FUSED_ROUNDS = 2
-
   private def connectedComponentsMinLabel(edges: DataFrame, maxIter: Int): DataFrame = {
     // The edge list is checkpointed ONCE up front (r15): the symmetrizing
     // union scans it twice, and every round scans it again — without the
     // cut each reference replays the possibly-expensive upstream pair
-    // generation (the phash pair plan is multi-second), the
-    // multi-reference plan-replay landmine.
+    // generation (the phash pair plan is multi-second).
     val e = ckpt(edges.toDF("a", "b"))
     // no distinct(): duplicate edges cannot move a min aggregate, and the
     // dedup shuffle would cost more than the duplicates it removes
@@ -106,64 +89,33 @@ object Graphs {
       .withColumn("label", col("node"))
       .transform(ckpt)
     // CLOSED-neighborhood edge set: self-loops come from the node
-    // checkpoint, so one round is ONE join + ONE min aggregate and — the
-    // r15 fusion enabler — references the previous label relation exactly
-    // ONCE. min over the closed neighborhood ≡ the textbook
-    // least(own, min-over-neighbors): identical labels, and f fused
-    // rounds compose into a LINEAR plan (no 2^f re-execution of inner
-    // rounds, which is where the first fused cut lost 2× on the phash
-    // graph).
+    // checkpoint, so one round is ONE join + ONE min aggregate and
+    // references the previous labels exactly ONCE (fuse 3). min over the
+    // closed neighborhood ≡ the textbook least(own, min-over-neighbors).
     val symC = sym.union(labels.select(col("node").as("a"),
       col("node").as("b")))
     def round(cur: DataFrame): DataFrame =
       symC.join(cur, symC("b") === cur("node"))
         .groupBy(symC("a").as("node")).agg(min("label").as("label"))
-    var iter = 0
-    var changed = true
-    // Convergence detection (r15): labels only ever DECREASE, so the
-    // label SUM strictly decreases while anything moves and is constant
-    // exactly at the fixpoint — one observed DECIMAL(38,0) sum per fused
-    // body replaces the per-round old-vs-new comparison (which needed a
-    // second reference to the previous labels). Sums ride the checkpoint
-    // action as observed metrics.
+    // Labels only ever DECREASE, so the label SUM strictly decreases
+    // while anything moves and is constant exactly at the fixpoint: one
+    // observed DECIMAL(38,0) sum per fused body replaces an old-vs-new
+    // comparison (which would reference the previous labels twice). An
+    // empty edge set sums to 0, not null.
     var prevSum: Option[String] = None
-    def sumCol = sum(col("label").cast("decimal(38,0)")).as("ls")
-    while (changed && iter < maxIter) {
-      // 3 rounds per checkpoint here (vs FUSED_ROUNDS = 2 for the
-      // multi-reference loops): the single-reference round makes fused
-      // plans LINEAR, so the only cost of a deeper fuse is identity
-      // rounds at the fixpoint — and diameter-3 pair graphs then
-      // converge in 2 checkpoints instead of 3
-      val f = math.min(FUSED_ROUNDS + 1, maxIter - iter)
-      var cur = labels
-      for (_ <- 1 to f) cur = round(cur)
-      val obs = org.apache.spark.sql.Observation(s"cc_round_$iter")
-      val next = cur.observe(obs, sumCol)
-        .transform(ckpt) // materialize + cut lineage (fires the metric)
-      // Bounded wait, not bare obs.get: get blocks FOREVER if the metric
-      // never fires, and it only fires because localCheckpoint happens to
-      // run through withAction on Spark 4.1.2 (getOrEmpty is
-      // private[spark]). The checkpoint action has already completed, so
-      // the metric is normally available instantly; if that internal ever
-      // changes, fall back to an explicit sum scan over the
-      // just-materialized checkpoint instead of hanging.
-      val s = awaitMetric(obs).map(_("ls").asInstanceOf[java.math.BigDecimal]
-          .stripTrailingZeros.toPlainString)
-        .getOrElse(next.agg(sumCol).head().getDecimal(0)
-          .stripTrailingZeros.toPlainString)
-      changed = !prevSum.contains(s)
+    graft.Fixpoint.converge("connectedComponents", maxIter, fuse = 3,
+        raise = "maxIter (the graph diameter exceeds it)") { (iter, f) =>
+      val (next, m) = graft.Fixpoint.observe(
+        Iterator.iterate(labels)(round).drop(f).next(), s"cc_round_$iter",
+        coalesce(sum(col("label").cast("decimal(38,0)")),
+          lit(0).cast("decimal(38,0)")).as("ls"))
+      val s = m("ls").asInstanceOf[java.math.BigDecimal]
+        .stripTrailingZeros.toPlainString
+      val done = prevSum.contains(s)
       prevSum = Some(s)
       labels = next
-      iter += f
+      done
     }
-    // Exhausting the cap with labels still moving means the result is NOT
-    // a fixpoint — partially-propagated cluster ids are silently WRONG
-    // (two nodes of one component keep different labels). Fail loudly;
-    // the caller raises maxIter (diameter bound) rather than ship bad ids.
-    if (changed)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIter rounds " +
-          "(graph diameter exceeds maxIter); raise maxIter")
     labels.select(col("node"), col("label").as("cluster_id"))
   }
 
@@ -184,10 +136,8 @@ object Graphs {
     * The joint fixpoint is a disjoint union of stars rooted at component
     * minima (large-star on any deeper chain emits a new shortcut edge,
     * so nothing else is stable). Convergence is detected by a
-    * (count, Σ xxhash64) checksum of the post-small-star edge set — one
-    * tiny aggregate per round off the already-checkpointed frame; each
-    * round localCheckpoints (lineage doubles per iteration otherwise,
-    * the CLAUDE.md open-ended-loop rule).
+    * (count, Σ xxhash64) checksum of the post-small-star edge set,
+    * observed on each round's checkpoint.
     *
     * Returns (labels, roundsUsed); throws beyond `maxRounds` like the
     * min-label path — a non-fixpoint edge set yields WRONG star labels.
@@ -205,18 +155,18 @@ object Graphs {
     // (count, Σ xxhash64) edge-set checksum. Hash sum in DECIMAL(38,0):
     // a BIGINT sum of ±2^63 hashes overflows under ANSI on a few
     // thousand rows.
-    def checksumCols: Seq[org.apache.spark.sql.Column] = Seq(
+    val checksumCols: Seq[org.apache.spark.sql.Column] = Seq(
       count(lit(1)).as("cnt"),
       coalesce(sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)")),
         lit(0).cast("decimal(38,0)")).as("hs"))
-    def checksum(df: DataFrame): (Long, String) = {
-      val r = df.agg(checksumCols.head, checksumCols.tail: _*).head()
-      (r.getLong(0), r.getDecimal(1).stripTrailingZeros.toPlainString)
+    def checksum(m: Map[String, Any]): (Long, String) = (m("cnt").asInstanceOf[Long],
+      m("hs").asInstanceOf[java.math.BigDecimal].stripTrailingZeros.toPlainString)
+    var prev = {
+      val r = cur.agg(checksumCols.head, checksumCols.tail: _*).head()
+      checksum(r.getValuesMap[Any](Seq("cnt", "hs")))
     }
-    var prev = checksum(cur)
-    var rounds = 0
-    var converged = false
-    while (!converged && rounds < maxRounds) {
+    val rounds = graft.Fixpoint.converge("alternatingCC", maxRounds, fuse = 1,
+        raise = "maxRounds") { (r, _) =>
       val sym = cur.select(col("u"), col("v"))
         .union(cur.select(col("v").as("u"), col("u").as("v")))
       // m = min of the CLOSED neighborhood; every emitted edge (v, m)
@@ -228,31 +178,18 @@ object Graphs {
       // small-star over the (larger, smaller)-oriented large output:
       // all neighbors under key u are < u, so m < u strictly
       val smin = large.groupBy("u").agg(min("v").as("m"))
-      // the convergence checksum rides the checkpoint action as an
-      // observed metric (the min-label-CC discipline, r15): one job per
-      // round instead of checkpoint + a second checksum scan; bounded
-      // await with an explicit scan off the checkpoint as fallback
-      val obs = org.apache.spark.sql.Observation(s"bigstar_$rounds")
-      val small = large.join(smin, Seq("u")).filter(col("v") =!= col("m"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .union(smin.select(col("u"), col("m").as("v")))
-        .distinct()
-        .observe(obs, checksumCols.head, checksumCols.tail: _*)
-        .transform(ckpt)
-      val sum1 = awaitMetric(obs) match {
-        case Some(m) => (m("cnt").asInstanceOf[Long],
-          m("hs").asInstanceOf[java.math.BigDecimal]
-            .stripTrailingZeros.toPlainString)
-        case None => checksum(small)
-      }
-      converged = sum1 == prev
+      val (small, m) = graft.Fixpoint.observe(
+        large.join(smin, Seq("u")).filter(col("v") =!= col("m"))
+          .select(col("v").as("u"), col("m").as("v"))
+          .union(smin.select(col("u"), col("m").as("v")))
+          .distinct(),
+        s"bigstar_$r", checksumCols: _*)
+      val sum1 = checksum(m)
+      val converged = sum1 == prev
       prev = sum1
       cur = small
-      rounds += 1
+      converged
     }
-    if (!converged)
-      throw new IllegalStateException(
-        s"alternatingCC did not converge in $maxRounds rounds; raise maxRounds")
     val labels = nodes
       .join(cur.select(col("u").as("node"), col("v").as("root")),
         Seq("node"), "left_outer")
@@ -354,11 +291,7 @@ object Graphs {
     * aggregates meet in a 1×1 broadcast crossJoin (whitelisted — a
     * keyed join on a shared literal constant-folds to the same BNLJ). */
   def globalClustering(edges: DataFrame): DataFrame = {
-    val und = edges.toDF("x", "y")
-      .select(least(col("x"), col("y")).as("u"),
-        greatest(col("x"), col("y")).as("v"))
-      .filter(col("u") =!= col("v")).distinct()
-      .transform(ckpt)
+    val und = canonical(edges)
     val wedges = und.select(col("u").as("node"))
       .union(und.select(col("v").as("node")))
       .groupBy("node").agg(count(lit(1)).as("d"))
@@ -386,21 +319,16 @@ object Graphs {
     * Same fixed-round discipline as kcore (3 synchronous rounds —
     * deterministic on both engines; the oracle unrolls as chained
     * CTEs). Per round the support join is the ordered-wedge shape of
-    * [[triangleCounts]] (candidates bounded by Σd², never edge²), and
-    * the survivor set is localCheckpoint'd — it is referenced three
-    * times per round (join base + both symmetric sides), the
-    * plan-doubling landmine.
+    * [[triangleCounts]] (candidates bounded by Σd², never edge²); the
+    * survivor set is referenced three times per round (join base + both
+    * symmetric sides), so rounds checkpoint in pairs.
     *
     * ORACLE COUPLING: the graph_ktruss DuckDB oracle hardcodes k = 3
     * (`HAVING COUNT(*) >= 1`) and exactly 3 unrolled peel rounds — any
     * oracle-compared caller MUST use the defaults ([[graphKtruss]] pins
     * them explicitly). Other (k, rounds) are fine for non-oracle use. */
   def trussPeel(edges: DataFrame, k: Int = 3, rounds: Int = 3): DataFrame = {
-    val und = edges.toDF("x", "y")
-      .select(least(col("x"), col("y")).as("u"),
-        greatest(col("x"), col("y")).as("v"))
-      .filter(col("u") =!= col("v")).distinct()
-      .transform(ckpt)
+    val und = canonical(edges)
     def round(al: DataFrame): DataFrame = {
       val sym = al.select(col("u").as("a"), col("v").as("b"))
         .union(al.select(col("v").as("a"), col("u").as("b")))
@@ -410,17 +338,7 @@ object Graphs {
         .groupBy("u", "v").agg(count(lit(1)).as("sup"))
         .filter(col("sup") >= k - 2).select("u", "v")
     }
-    var alive = und
-    var r = 0
-    while (r < rounds) {
-      // FUSED_ROUNDS peels per checkpoint (see FUSED_ROUNDS) — each round
-      // references the survivor set 3×, so f stays at 2 (9 leaf copies)
-      val f = math.min(FUSED_ROUNDS, rounds - r)
-      var cur = alive
-      for (_ <- 1 to f) cur = round(cur)
-      alive = cur.transform(ckpt)
-      r += f
-    }
+    val alive = graft.Fixpoint.fixed(und, rounds, fuse = 2)(round)
     und.join(alive.withColumn("flag", lit(true)), Seq("u", "v"), "left_outer")
       .select(col("u"), col("v"),
         coalesce(col("flag"), lit(false)).as("in_truss"))
@@ -434,7 +352,7 @@ object Graphs {
     * needs: per-round work is two hash joins + one min-struct aggregate,
     * contraction is 2-cycle-broken POINTER JUMPING on the component
     * relation (which shrinks geometrically), and every loop-carried
-    * relation localCheckpoints (the open-ended-loop lineage rule).
+    * relation is checkpointed.
     *
     * `edges` needs three long columns (u, v, w) with STRICTLY DISTINCT
     * weights — uniqueness makes the forest unique (cut property), which
@@ -463,22 +381,15 @@ object Graphs {
       .distinct().withColumn("comp", col("node"))
       .transform(ckpt)
     val picked = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var rounds = 0
-    var done = false
-    while (!done && rounds < maxRounds) {
-      // the active-edge count rides the checkpoint action as an observed
-      // metric (the min-label-CC discipline, r15) — one job instead of
-      // checkpoint + isEmpty scan; bounded await, explicit scan fallback
-      val obsE = org.apache.spark.sql.Observation(s"boruvka_e_$rounds")
-      val e = und
+    val rounds = graft.Fixpoint.converge("boruvkaMsf", maxRounds, fuse = 1,
+        raise = "maxRounds (component count halves per round)") { (round, _) =>
+      // the active-edge count is observed on the checkpoint, which comes
+      // BEFORE the count check so that the check does not replay the join
+      val (e, m) = graft.Fixpoint.observe(und
         .join(comp.toDF("u", "cu"), Seq("u"))
         .join(comp.toDF("v", "cv"), Seq("v"))
-        .filter(col("cu") =!= col("cv"))
-        .observe(obsE, count(lit(1)).as("cnt"))
-        .transform(ckpt) // BEFORE the count check: it must not replay
-      val eCnt = awaitMetric(obsE).map(_("cnt").asInstanceOf[Long])
-        .getOrElse(if (e.isEmpty) 0L else 1L)
-      if (eCnt == 0L) done = true
+        .filter(col("cu") =!= col("cv")), s"boruvka_e_$round", count(lit(1)).as("cnt"))
+      if (m("cnt") == 0L) true
       else {
         // per-component minimum outgoing edge (min-struct: w is unique,
         // so the winner and its payload are deterministic)
@@ -511,38 +422,22 @@ object Graphs {
               .otherwise(col("p")).as("p"))
           .transform(ckpt)
         // pointer jumping: p ← p(p) until fixpoint (≤ log depth rounds)
-        var jumping = true
-        var jumps = 0
-        while (jumping && jumps < maxRounds) {
-          // the moved-count rides the jump checkpoint as an observed
-          // metric — one job per jump instead of two (r15)
-          val obsJ = org.apache.spark.sql.Observation(
-            s"boruvka_jump_${rounds}_$jumps")
-          val nxt = ptr.toDF("c0", "p0")
+        graft.Fixpoint.converge("boruvkaMsf pointer jumping", maxRounds, fuse = 1,
+            raise = "maxRounds") { (jump, _) =>
+          val (nxt, mv) = graft.Fixpoint.observe(ptr.toDF("c0", "p0")
             .join(ptr.toDF("p0", "p1"), Seq("p0"))
             .select(col("c0").as("c"), col("p1").as("p"),
-              (col("p1") =!= col("p0")).cast("long").as("mv"))
-            .observe(obsJ, coalesce(sum("mv"), lit(0L)).as("mv"))
-            .transform(ckpt)
-          jumping = awaitMetric(obsJ).map(_("mv").asInstanceOf[Long])
-            .getOrElse(nxt.agg(coalesce(sum("mv"), lit(0L)).as("mv"))
-              .head().getLong(0)) > 0
+              (col("p1") =!= col("p0")).cast("long").as("mv")),
+            s"boruvka_jump_${round}_$jump", coalesce(sum("mv"), lit(0L)).as("mv"))
           ptr = nxt.select("c", "p")
-          jumps += 1
+          mv("mv") == 0L
         }
-        if (jumping) throw new IllegalStateException(
-          s"boruvkaMsf pointer jumping did not converge in $maxRounds " +
-            "rounds; raise maxRounds")
         comp = comp.join(ptr.toDF("comp", "root"), Seq("comp"), "left_outer")
           .select(col("node"), coalesce(col("root"), col("comp")).as("comp"))
           .transform(ckpt)
+        false
       }
-      rounds += 1
     }
-    if (!done) throw new IllegalStateException(
-      s"boruvkaMsf did not converge in $maxRounds rounds " +
-        "(component count halves per round — this graph needs more); " +
-        "raise maxRounds")
     val forest = if (picked.isEmpty) und.limit(0)
       else picked.reduce(_ union _)
     (forest, rounds)
@@ -565,11 +460,7 @@ object Graphs {
     * exact. One row out: wedge-pair count, multi-wedge pairs, squares.
     */
   def squareCount(edges: DataFrame): DataFrame = {
-    val und = edges.toDF("x", "y")
-      .select(least(col("x"), col("y")).as("u"),
-        greatest(col("x"), col("y")).as("v"))
-      .filter(col("u") =!= col("v")).distinct()
-      .transform(ckpt)
+    val und = canonical(edges)
     val sym = und.select(col("u").as("a"), col("v").as("b"))
       .union(und.select(col("v").as("a"), col("u").as("b")))
     sym.select(col("a").as("x"), col("b").as("m"))
@@ -619,15 +510,10 @@ object Graphs {
     * O(√|E|)², the classic arboricity bound, so the plan survives skewed
     * degree distributions, not just the degree-capped knn input. */
   def triangleCounts(edges: DataFrame): DataFrame = {
-    val raw = edges.toDF("x", "y")
-    // materialize the (small) canonical edge list ONCE: degrees and the
-    // orientation both consume it, and without the checkpoint each
-    // reference replays the entire upstream edge construction (28 planned
-    // shuffles for the knn-graph input vs 5 after)
-    val und = raw.select(least(col("x"), col("y")).as("u"),
-        greatest(col("x"), col("y")).as("v"))
-      .filter(col("u") =!= col("v")).distinct()
-      .transform(ckpt)
+    // degrees and the orientation both consume the canonical list; the
+    // checkpoint stops each reference replaying the upstream edge
+    // construction (28 planned shuffles for the knn-graph input vs 5)
+    val und = canonical(edges)
     val deg = und.select(col("u").as("n")).union(und.select(col("v").as("n")))
       .groupBy("n").agg(count(lit(1)).as("d"))
     val firstLower = col("du") < col("dv") ||
@@ -670,11 +556,7 @@ object Graphs {
     * pipeline, so the arboricity-bounded wedge join stays the only
     * super-linear step. */
   def clusteringCoeff(edges: DataFrame): DataFrame = {
-    val und = edges.toDF("x", "y")
-      .select(least(col("x"), col("y")).as("u"),
-        greatest(col("x"), col("y")).as("v"))
-      .filter(col("u") =!= col("v")).distinct()
-      .transform(ckpt) // feeds degrees AND the triangle pipeline
+    val und = canonical(edges) // feeds degrees AND the triangle pipeline
     val deg = und.select(col("u").as("node"))
       .union(und.select(col("v").as("node")))
       .groupBy("node").agg(count(lit(1)).as("d"))
@@ -703,11 +585,7 @@ object Graphs {
     * counts via the per-endpoint adjacency join — wedge fan-out is
     * bounded by degree exactly like the triangle plan, never |V|². */
   def neighborJaccard(edges: DataFrame): DataFrame = {
-    val und = edges.toDF("x", "y")
-      .select(least(col("x"), col("y")).as("u"),
-        greatest(col("x"), col("y")).as("v"))
-      .filter(col("u") =!= col("v")).distinct()
-      .transform(ckpt)
+    val und = canonical(edges)
     val adj = und.select(col("u").as("x"), col("v").as("n"))
       .union(und.select(col("v").as("x"), col("u").as("n")))
     val deg = adj.groupBy("x").agg(count(lit(1)).as("d"))
@@ -739,11 +617,7 @@ object Graphs {
     * is Σ deg(v)² — degree-bounded like the triangle plan, never |V|²;
     * the top-k is TakeOrdered, no global sort exchange. */
   def linkPrediction(edges: DataFrame): DataFrame = {
-    val und = edges.toDF("x", "y")
-      .select(least(col("x"), col("y")).as("u"),
-        greatest(col("x"), col("y")).as("v"))
-      .filter(col("u") =!= col("v")).distinct()
-      .transform(ckpt)
+    val und = canonical(edges)
     val adj = und.select(col("u").as("mid"), col("v").as("n"))
       .union(und.select(col("v").as("mid"), col("u").as("n")))
     val deg = adj.groupBy("mid").agg(count(lit(1)).as("d"))
@@ -775,11 +649,7 @@ object Graphs {
     * self-join on the center (fan-out Σ deg², the triangle bound) +
     * a distinct — never |V|². */
   def twoHopReach(edges: DataFrame): DataFrame = {
-    val und = edges.toDF("x", "y")
-      .select(least(col("x"), col("y")).as("u"),
-        greatest(col("x"), col("y")).as("v"))
-      .filter(col("u") =!= col("v")).distinct()
-      .transform(ckpt)
+    val und = canonical(edges)
     val adj = und.select(col("u").as("x"), col("v").as("n"))
       .union(und.select(col("v").as("x"), col("u").as("n")))
     val deg = adj.groupBy("x").agg(count(lit(1)).as("deg"))
@@ -809,11 +679,7 @@ object Graphs {
     * canonical edges; the rank window rides the ≤|distinct degrees|-
     * bucketed exchange; single-row folds crossJoin (whitelisted). */
   def hubnessAudit(edges: DataFrame): DataFrame = {
-    val und = edges.toDF("x", "y")
-      .select(least(col("x"), col("y")).as("u"),
-        greatest(col("x"), col("y")).as("v"))
-      .filter(col("u") =!= col("v")).distinct()
-      .transform(ckpt)
+    val und = canonical(edges)
     val deg = und.select(col("u").as("node"))
       .union(und.select(col("v").as("node")))
       .groupBy("node").agg(count(lit(1)).as("d"))
@@ -871,16 +737,12 @@ object Graphs {
     * small pair graph). A deterministic round count is also what keeps
     * the oracle an unrolled CTE chain. */
   def pageRank(edges: DataFrame, iters: Int = 5): DataFrame = {
-    // checkpoint the raw edges FIRST (r15): e is referenced twice by the
-    // symmetrizing union and sym twice more (degree fold + join), so an
-    // uncut plan replays the upstream pair generation up to 4× inside
-    // the outE materialization — the multi-reference landmine
-    val e = ckpt(edges.toDF("x", "y").filter(col("x") =!= col("y")))
-    // duplicates DO change sums here (unlike the min-label CC), so the
-    // symmetrized edge set must be made distinct
-    val sym = e.select(col("x").as("a"), col("y").as("b"))
-      .union(e.select(col("y").as("a"), col("x").as("b")))
-      .distinct()
+    // raw edges cut first (r15): the union references them twice and
+    // sym is referenced twice more (degree fold + join), so an uncut plan
+    // replays the upstream pair generation up to 4× inside outE.
+    // Duplicates DO change sums here (unlike the min-label CC), so the
+    // symmetrized edge set is distinct.
+    val sym = symmetrize(edges, cutRaw = true)
     val deg = sym.groupBy("a").agg(count(lit(1)).as("deg"))
     val outE = sym.join(deg, Seq("a")).transform(ckpt) // (a, b, deg(a))
     val n = outE.select("a").distinct().count() // off the checkpoint
@@ -920,15 +782,7 @@ object Graphs {
     * (edge ⋈ label) join + two partial-aggregated shuffles; bounded
     * lineage (fixed rounds) ⇒ no per-round checkpoint. */
   def labelPropagation(edges: DataFrame, iters: Int = 4): DataFrame = {
-    // NO up-front edge checkpoint here (measured 0.85x): the union's two
-    // references share the pair plan's exchanges (ReusedExchange), so the
-    // extra materialization costs more than the replayed tail — unlike
-    // pageRank, whose FOUR references made the cut a 2.3x win
-    val e = edges.toDF("x", "y").filter(col("x") =!= col("y"))
-    val sym = e.select(col("x").as("a"), col("y").as("b"))
-      .union(e.select(col("y").as("a"), col("x").as("b")))
-      .distinct()
-      .transform(ckpt)
+    val sym = symmetrize(edges, cutRaw = false).transform(ckpt)
     var labels = sym.select(col("a").as("node")).distinct()
       .withColumn("label", col("node"))
     for (_ <- 1 to iters) {
@@ -955,39 +809,11 @@ object Graphs {
     * "cluster or coincidence" test run before a transitive merge.
     * Fixed-round discipline (the labelPropagation precedent): 4
     * deterministic synchronous rounds, so the output is well-defined on
-    * both engines and the oracle unrolls as chained CTEs. Each round
-    * references the survivor set TWICE (both endpoint filters) — the
-    * ancestorClosure plan-doubling case, so the per-round
-    * localCheckpoint is load-bearing. Edges checkpointed once; per
-    * round two broadcast-able semi-joins + one partial-agg degree
-    * shuffle. */
+    * both engines and the oracle unrolls as chained CTEs. Plan: see
+    * [[peelStates]]. */
   def kcorePeel(edges: DataFrame, k: Int = 2, rounds: Int = 4): DataFrame = {
-    // e checkpointed first: the symmetrizing union references it twice
-    // (the pageRank replay note)
-    val e = ckpt(edges.toDF("x", "y").filter(col("x") =!= col("y")))
-    val sym = e.select(col("x").as("a"), col("y").as("b"))
-      .union(e.select(col("y").as("a"), col("x").as("b")))
-      .distinct()
-      .transform(ckpt)
-    val nodes = sym.select(col("a").as("node")).distinct().transform(ckpt)
-    def round(al: DataFrame): DataFrame = sym
-      .join(al.select(col("node").as("a")), Seq("a"), "left_semi")
-      .join(al.select(col("node").as("b")), Seq("b"), "left_semi")
-      .groupBy(col("a").as("node")).agg(count(lit(1)).as("deg"))
-      .filter(col("deg") >= k).select("node")
-    var alive = nodes
-    var r = 0
-    while (r < rounds) {
-      // FUSED_ROUNDS synchronous rounds per checkpoint (identical
-      // composed algebra — the oracle's unrolled CTEs don't care where
-      // the materialization boundary sits)
-      val f = math.min(FUSED_ROUNDS, rounds - r)
-      var cur = alive
-      for (_ <- 1 to f) cur = round(cur)
-      alive = cur.transform(ckpt)
-      r += f
-    }
-    nodes.join(alive.withColumn("flag", lit(true)), Seq("node"), "left_outer")
+    val (nodes, alive) = peelStates(edges, k, rounds)
+    nodes.join(alive.last.withColumn("flag", lit(true)), Seq("node"), "left_outer")
       .select(col("node"), coalesce(col("flag"), lit(false)).as("in_core"))
   }
 
@@ -1005,50 +831,35 @@ object Graphs {
     * barely-attached chain from the core's immediate shell — the layer
     * is the centrality-by-robustness readout dedup survivorship uses to
     * pick canonical docs from the STRUCTURALLY stable part of a family.
-    * Same plan discipline as kcorePeel (per-round checkpoints are
-    * load-bearing: survivors are referenced by both endpoint filters AND
-    * the round's anti-join). */
+    * The dropped sets stay lazy plans over the peel's checkpoints: the
+    * final nodes⋈layers action is their only consumer. */
   def onionLayers(edges: DataFrame, k: Int = 2, rounds: Int = 4): DataFrame = {
-    // e checkpointed first: the symmetrizing union references it twice
-    // (the pageRank replay note)
-    val e = ckpt(edges.toDF("x", "y").filter(col("x") =!= col("y")))
-    val sym = e.select(col("x").as("a"), col("y").as("b"))
-      .union(e.select(col("y").as("a"), col("x").as("b")))
-      .distinct()
-      .transform(ckpt)
+    val (nodes, alive) = peelStates(edges, k, rounds)
+    val layers = (1 to rounds).map { t =>
+      alive(t - 1).join(alive(t), Seq("node"), "left_anti")
+        .withColumn("layer", lit(t.toLong))
+    }.reduce(_ unionByName _)
+    nodes.join(layers, Seq("node"), "left_outer")
+      .select(col("node"), coalesce(col("layer"), lit(0L)).as("layer"),
+        (coalesce(col("layer"), lit(0L)) === 0L).as("in_core"))
+  }
+
+  /** The k-core peel shared by [[kcorePeel]] and [[onionLayers]]: the
+    * checkpointed node set and the survivor sets after each of `rounds`
+    * rounds (element 0 = every node). Edges are symmetrized and
+    * checkpointed once; each round is two semi-joins + one partial-agg
+    * degree shuffle, and references the survivor set twice (both
+    * endpoint filters), so rounds checkpoint in pairs. */
+  private def peelStates(edges: DataFrame, k: Int, rounds: Int)
+      : (DataFrame, IndexedSeq[DataFrame]) = {
+    val sym = symmetrize(edges, cutRaw = true).transform(ckpt)
     val nodes = sym.select(col("a").as("node")).distinct().transform(ckpt)
     def round(al: DataFrame): DataFrame = sym
       .join(al.select(col("node").as("a")), Seq("a"), "left_semi")
       .join(al.select(col("node").as("b")), Seq("b"), "left_semi")
       .groupBy(col("a").as("node")).agg(count(lit(1)).as("deg"))
       .filter(col("deg") >= k).select("node")
-    var alive = nodes
-    var layers: DataFrame = null
-    var t = 1
-    while (t <= rounds) {
-      // FUSED_ROUNDS per checkpoint; the per-round dropped sets stay
-      // LAZY plans over the fused bodies (they always were lazy — the
-      // final nodes⋈layers action is the only consumer), so the round-t
-      // survivor plan appears a few times in the final plan instead of
-      // being its own materialization round-trip. Same composed algebra.
-      val f = math.min(FUSED_ROUNDS, rounds - t + 1)
-      var cur = alive
-      val prevs = (0 until f).map { _ => val p = cur; cur = round(cur); p }
-      alive = cur.transform(ckpt)
-      // dropped(t+i) = survivors(i) ∖ survivors(i+1); the last round's
-      // minuend is the just-materialized checkpoint, earlier rounds stay
-      // in-plan over the previous leaf
-      val states = prevs :+ alive
-      for (i <- 0 until f) {
-        val dropped = states(i).join(states(i + 1), Seq("node"), "left_anti")
-          .withColumn("layer", lit((t + i).toLong))
-        layers = if (layers == null) dropped else layers.unionByName(dropped)
-      }
-      t += f
-    }
-    nodes.join(layers, Seq("node"), "left_outer")
-      .select(col("node"), coalesce(col("layer"), lit(0L)).as("layer"),
-        (coalesce(col("layer"), lit(0L)) === 0L).as("in_core"))
+    (nodes, graft.Fixpoint.states(nodes, rounds, fuse = 2)(round))
   }
 
   /** Onion layers over the trigram-Jaccard pair graph — kcore's readout
@@ -1065,13 +876,11 @@ object Graphs {
     * root must self-loop (dist 0).
     *
     * Unlike [[pageRank]]'s single-reference loop, each round references
-    * the previous mapping TWICE (both join sides) — without a per-round
-    * localCheckpoint the PLAN doubles per round (2^rounds copies of the
-    * base scan, the PlanAuditSpec landmine), so here the checkpoint is
-    * load-bearing, not optional. Non-convergence (2^rounds < tree
-    * depth) leaves some anc short of the root — checked with one
-    * anti-join action and failed LOUDLY, the connectedComponents
-    * discipline. */
+    * the previous mapping TWICE (both join sides), so without
+    * checkpoints the PLAN doubles per round (2^rounds copies of the base
+    * scan). Non-convergence (2^rounds < tree depth) leaves some anc
+    * short of the root — checked with one anti-join action and failed
+    * LOUDLY, the connectedComponents discipline. */
   def ancestorClosure(parents: DataFrame, rounds: Int = 6): DataFrame = {
     val p = parents.toDF("node", "anc")
     // a parent pointer targeting a missing node would silently DROP its
@@ -1081,23 +890,13 @@ object Graphs {
         .join(p.select("node"), col("tgt") === col("node"), "left_anti").isEmpty)
       throw new IllegalArgumentException(
         "ancestorClosure: parent pointers reference nodes absent from the mapping")
-    var f = p.withColumn("dist",
-      when(col("node") === col("anc"), 0L).otherwise(1L)).transform(ckpt)
     def compose(g: DataFrame): DataFrame =
       g.as("x").join(g.as("y"), col("x.anc") === col("y.node"))
         .select(col("x.node").as("node"), col("y.anc").as("anc"),
           (col("x.dist") + col("y.dist")).as("dist"))
-    var r = 0
-    while (r < rounds) {
-      // FUSED_ROUNDS compositions per checkpoint — f∘f∘(f∘f) is the same
-      // mapping whether or not the inner composition materialized
-      // (see FUSED_ROUNDS)
-      val ff = math.min(FUSED_ROUNDS, rounds - r)
-      var cur = f
-      for (_ <- 1 to ff) cur = compose(cur)
-      f = cur.transform(ckpt)
-      r += ff
-    }
+    val f = graft.Fixpoint.fixed(p.withColumn("dist",
+      when(col("node") === col("anc"), 0L).otherwise(1L)).transform(ckpt),
+      rounds, fuse = 2)(compose)
     // converged ⟺ every anc is a root (self-parented); else fail loudly
     val roots = p.filter(col("node") === col("anc")).select(col("node").as("anc"))
     if (!f.join(broadcast(roots), Seq("anc"), "left_anti").isEmpty)
@@ -1124,19 +923,13 @@ object Graphs {
     * recurrence as CTEs. Each round references the previous dist table
     * TWICE (the relaxation source and the left-join base), so — like
     * [[kcorePeel]]/[[ancestorClosure]], unlike [[labelPropagation]]'s
-    * single-reference loop — a per-round localCheckpoint is
-    * load-bearing: without it the plan doubles per round (2^rounds
-    * copies of the node-distinct subtree). */
+    * single-reference loop — the rounds need checkpoints: without them
+    * the plan doubles per round (2^rounds copies of the node-distinct
+    * subtree). */
   def bfsLayers(edges: DataFrame, seed: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
                 rounds: Int = 4): DataFrame = {
-    // no up-front edge checkpoint (measured 0.86x — the labelPropagation
-    // ReusedExchange note)
-    val e = edges.toDF("x", "y").filter(col("x") =!= col("y"))
-    val sym = e.select(col("x").as("a"), col("y").as("b"))
-      .union(e.select(col("y").as("a"), col("x").as("b")))
-      .distinct()
-      .transform(ckpt)
-    var dist = sym.select(col("a").as("node")).distinct()
+    val sym = symmetrize(edges, cutRaw = false).transform(ckpt)
+    val dist0 = sym.select(col("a").as("node")).distinct()
       .withColumn("d", when(seed(col("node")), 0L)
         .otherwise(lit(null).cast("long")))
       .transform(ckpt)
@@ -1150,17 +943,8 @@ object Graphs {
             .when(col("nd").isNull, col("d"))
             .otherwise(least(col("d"), col("nd"))).as("d"))
     }
-    var r = 0
-    while (r < rounds) {
-      // FUSED_ROUNDS relaxations per checkpoint — identical recurrence,
-      // fewer driver round-trips (see FUSED_ROUNDS)
-      val f = math.min(FUSED_ROUNDS, rounds - r)
-      var cur = dist
-      for (_ <- 1 to f) cur = round(cur)
-      dist = cur.transform(ckpt)
-      r += f
-    }
-    dist.select(col("node"), coalesce(col("d"), lit(-1L)).as("dist4"))
+    graft.Fixpoint.fixed(dist0, rounds, fuse = 2)(round)
+      .select(col("node"), coalesce(col("d"), lit(-1L)).as("dist4"))
   }
 
   /** BFS layers over the trigram-Jaccard pair graph, seeded at
@@ -1185,35 +969,31 @@ object Graphs {
     * `rounds` horizon — DOCUMENTED truncation, not convergence: a node
     * farther than `rounds` hops from every landmark reads (0, 0),
     * byte-identical to a disconnected one (ScaleSpec pins this on a
-    * 512-node path); callers wanting a wider view raise `rounds`.
-    * Per-round localCheckpoint because the dist relation is referenced
-    * twice per round (the plan-replay landmine). */
+    * 512-node path); callers wanting a wider view raise `rounds`. */
   def landmarkHarmonic(edges: DataFrame, nLandmarks: Int = 4,
                        rounds: Int = 6): DataFrame = {
     val (dist, lms) = landmarkDistances(edges, nLandmarks, rounds)
     val idx = lms.indices
+    // an empty graph has no landmarks; its (empty) table still needs
+    // both columns
+    def total(terms: Seq[org.apache.spark.sql.Column]) =
+      terms.reduceOption(_ + _).getOrElse(lit(0L))
     dist.select(col("node"),
-      idx.map(i => when(col(s"d$i") > 0, 1L).otherwise(0L))
-        .reduce(_ + _).as("n_reached"),
-      idx.map(i => when(col(s"d$i") > 0, expr(s"1000 div d$i"))
-        .otherwise(0L)).reduce(_ + _).as("harmonic_milli"))
+      total(idx.map(i => when(col(s"d$i") > 0, 1L).otherwise(0L))).as("n_reached"),
+      total(idx.map(i => when(col(s"d$i") > 0, expr(s"1000 div d$i"))
+        .otherwise(0L))).as("harmonic_milli"))
   }
 
   /** The shared landmark-BFS core: md5-'lm:'-picked landmarks, `rounds`
     * synchronous relaxations over ONE dense (node, d0..dL-1) table —
     * consumed by [[landmarkHarmonic]] and [[graphDiameterEstimate]].
-    * Returns the converged checkpointed dist table plus the landmark
-    * ids in pick order (the lm_idx the estimators report). */
+    * The dist relation is referenced twice per round, so rounds
+    * checkpoint in pairs. Returns the final checkpointed dist table plus
+    * the landmark ids in pick order (the lm_idx the estimators report). */
   private[operators] def landmarkDistances(
       edges: DataFrame, nLandmarks: Int, rounds: Int)
       : (DataFrame, Array[Long]) = {
-    // e checkpointed first: the symmetrizing union references it twice
-    // (the pageRank replay note)
-    val e = ckpt(edges.toDF("x", "y").filter(col("x") =!= col("y")))
-    val sym = e.select(col("x").as("a"), col("y").as("b"))
-      .union(e.select(col("y").as("a"), col("x").as("b")))
-      .distinct()
-      .transform(ckpt)
+    val sym = symmetrize(edges, cutRaw = true).transform(ckpt)
     val nodes = sym.select(col("a").as("node")).distinct()
     val lms: Array[Long] = nodes
       .withColumn("h", expr("cast(conv(substring(md5(cast(concat('lm:'," +
@@ -1221,7 +1001,7 @@ object Graphs {
       .orderBy("h", "node").limit(nLandmarks)
       .select("node").collect().map(_.getLong(0))
     val idx = lms.indices
-    var dist = nodes.select(col("node") +: idx.map(i =>
+    val dist0 = nodes.select(col("node") +: idx.map(i =>
       when(col("node") === lms(i), 0L).otherwise(lit(null).cast("long"))
         .as(s"d$i")): _*)
       .transform(ckpt)
@@ -1233,16 +1013,10 @@ object Graphs {
         .select(col("node") +: idx.map(i =>
           least(col(s"d$i"), col(s"nd$i")).as(s"d$i")): _*)
     }
-    var r = 0
-    while (r < rounds) {
-      // FUSED_ROUNDS relaxations per checkpoint (see FUSED_ROUNDS)
-      val f = math.min(FUSED_ROUNDS, rounds - r)
-      var cur = dist
-      for (_ <- 1 to f) cur = round(cur)
-      dist = cur.transform(ckpt)
-      r += f
-    }
-    (dist, lms)
+    // no nodes ⇒ no landmarks and no d-columns to relax: dist0 is the
+    // (empty) answer
+    val relax = if (lms.isEmpty) 0 else rounds
+    (graft.Fixpoint.fixed(dist0, relax, fuse = 2)(round), lms)
   }
 
   /** Harmonic centrality of the k-NN similarity graph from 4 hash
@@ -1334,11 +1108,7 @@ object Graphs {
     * pair generation in the plan (the multi-reference landmine —
     * 14 planned shuffles vs 4 after). */
   def degreeStats(edges: DataFrame): DataFrame = {
-    val und = edges.toDF("x", "y")
-      .select(least(col("x"), col("y")).as("u"),
-        greatest(col("x"), col("y")).as("v"))
-      .filter(col("u") =!= col("v")).distinct()
-      .transform(ckpt)
+    val und = canonical(edges)
     val deg = und.select(col("u").as("n")).union(und.select(col("v").as("n")))
       .groupBy("n").agg(count(lit(1)).as("d"))
     deg.select(expr("cast(length(bin(d)) - 1 as bigint)").as("deg_bits"), col("d"))
@@ -1363,11 +1133,7 @@ object Graphs {
     * (each is referenced twice), then two equi-joins onto the edge ends
     * and a single-row fold. */
   def degreeAssortativity(edges: DataFrame): DataFrame = {
-    val und = edges.toDF("x", "y")
-      .select(least(col("x"), col("y")).as("u"),
-        greatest(col("x"), col("y")).as("v"))
-      .filter(col("u") =!= col("v")).distinct()
-      .transform(ckpt)
+    val und = canonical(edges)
     val sym = und.union(und.select(col("v"), col("u"))).toDF("a", "b")
     val deg = sym.groupBy("a").agg(count(lit(1)).as("d")).transform(ckpt)
     sym
@@ -1473,12 +1239,7 @@ object Graphs {
     * join against data-sized relations, so no BNLJ and nothing wider
     * than the histograms ever shuffles. */
   def graphRichClub(s: SparkSession, dir: String): DataFrame = {
-    val und = SketchQueries.simKnnGraph(s, dir)
-      .select(col("qid").as("doc1"), col("vec_id").as("doc2"))
-      .select(least(col("doc1"), col("doc2")).as("u"),
-        greatest(col("doc1"), col("doc2")).as("v"))
-      .filter(col("u") =!= col("v")).distinct()
-      .transform(ckpt)
+    val und = canonical(SketchQueries.simKnnGraph(s, dir).select("qid", "vec_id"))
     val deg = und.select(col("u").as("n")).union(und.select(col("v").as("n")))
       .groupBy("n").agg(count(lit(1)).as("d"))
       .transform(ckpt)

@@ -433,27 +433,24 @@ object SketchQueries {
     val entries = sym.select(col("a").as("nid")).distinct()
       .orderBy("nid").limit(BEAM)
     val wq = Window.partitionBy("qid").orderBy(col("dotfp").desc, col("nid"))
-    var visited = qdots.select("qid").distinct()
-      .crossJoin(broadcast(entries))
-      .join(qdots, Seq("qid", "nid"))
-      .transform(graft.Ckpt.capped)
     // the frontier is a LAZY top-BEAM window over the visited checkpoint
     // leaf (r15): it needs no materialization of its own — each round's
-    // plan re-derives it from the leaf, halving the per-round checkpoint
-    // round-trips (visited is referenced twice per round: frontier rank
-    // + the union base, both off the leaf)
-    def frontierOf(v: org.apache.spark.sql.DataFrame) =
-      v.withColumn("rn", row_number().over(wq))
-        .filter(col("rn") <= BEAM).select("qid", "nid", "dotfp")
-    for (_ <- 1 to 4) {
-      val expanded = frontierOf(visited)
+    // plan re-derives it from the leaf (visited is referenced twice per
+    // round: frontier rank + the union base, both off the leaf)
+    def expand(v: org.apache.spark.sql.DataFrame) = {
+      val expanded = v.withColumn("rn", row_number().over(wq))
+        .filter(col("rn") <= BEAM)
         .select(col("qid"), col("nid").as("a"))
         .join(sym, Seq("a"))
         .select(col("qid"), col("b").as("nid")).distinct()
         .join(qdots, Seq("qid", "nid"))
-      visited = visited.unionByName(expanded).dropDuplicates("qid", "nid")
-        .transform(graft.Ckpt.capped)
+      v.unionByName(expanded).dropDuplicates("qid", "nid")
     }
+    // one round per checkpoint: deeper fusion of the beam is unmeasured
+    val visited = graft.Fixpoint.fixed(qdots.select("qid").distinct()
+      .crossJoin(broadcast(entries))
+      .join(qdots, Seq("qid", "nid"))
+      .transform(graft.Ckpt.capped), rounds = 4, fuse = 1)(expand)
     val found = visited.withColumn("r", row_number().over(wq))
       .filter(col("r") <= 10).select("qid", "nid")
     val exact = qdots.withColumn("r", row_number().over(wq))

@@ -1587,6 +1587,13 @@ class AnalyticsSpec extends SparkSpec {
     }
     assert(rows.map(_._2).distinct.length === 6)
     rows.foreach { case (_, _, c) => assert(c >= 0L) }
+    // a 3-vector corpus leaves round 3 without a candidate: a named
+    // error, never a silent center 0 at cost 0
+    val tiny = java.nio.file.Files.createTempDirectory("fl_tiny").toString
+    spark.read.parquet(s"$sf/embeddings.parquet").orderBy("vec_id").limit(3)
+      .write.parquet(s"$tiny/embeddings.parquet")
+    val e = intercept[IllegalStateException](Analytics.simFacilityLocation(spark, tiny))
+    assert(e.getMessage.contains("fl_round_3"), e.getMessage)
   }
 
   test("triplet margin audit: counts are consistent and violations bounded") {

@@ -94,6 +94,39 @@ class GraphsSpec extends SparkSpec {
     assert(e.getMessage.contains("did not converge"))
   }
 
+  test("degenerate inputs: every round-loop operator on no edges and on one edge") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.col
+    val none = Seq.empty[(Long, Long)].toDF("a", "b")
+    val one = Seq((1L, 2L)).toDF("a", "b")
+    // (operator, its rows on the single edge 1–2); on no edges every one
+    // returns no rows
+    val ops: Seq[(String, DataFrame => DataFrame, Set[Seq[Any]])] = Seq(
+      ("min-label CC", Graphs.connectedComponents(_), Set(Seq(1L, 1L), Seq(2L, 1L))),
+      ("big-star CC", Graphs.connectedComponents(_, algo = "big-star"),
+        Set(Seq(1L, 1L), Seq(2L, 1L))),
+      ("boruvka", e => Graphs.boruvkaMsf(e.withColumn("w", col("a") + col("b"))),
+        Set(Seq(1L, 2L, 3L))),
+      ("ktruss", Graphs.trussPeel(_), Set(Seq(1L, 2L, false))),
+      ("kcore", Graphs.kcorePeel(_), Set(Seq(1L, false), Seq(2L, false))),
+      ("onion", Graphs.onionLayers(_), Set(Seq(1L, 1L, false), Seq(2L, 1L, false))),
+      // the edge as a tree: 2 hangs off root 1
+      ("ancestor closure", e => Graphs.ancestorClosure(
+        e.select(col("b"), col("a")).union(e.select(col("a"), col("a")))),
+        Set(Seq(1L, 1L, 0L), Seq(2L, 1L, 1L))),
+      ("bfs", Graphs.bfsLayers(_, n => n === 1L), Set(Seq(1L, 0L), Seq(2L, 1L))),
+      ("landmark harmonic", Graphs.landmarkHarmonic(_),
+        Set(Seq(1L, 1L, 1000L), Seq(2L, 1L, 1000L))))
+    for ((name, op, want) <- ops) {
+      assert(op(none).collect().isEmpty, s"$name on no edges")
+      assert(op(one).collect().map(_.toSeq).toSet === want, s"$name on one edge")
+    }
+    val e = intercept[IllegalArgumentException](Graphs.pageRank(none))
+    assert(e.getMessage.contains("pageRank on an empty graph"))
+    val ranks = Graphs.pageRank(one).select("rank_fp").as[Long].collect()
+    assert(ranks.length === 2 && ranks.distinct.length === 1, "symmetric pair ranks alike")
+  }
+
   test("fixed-point pagerank replays the integer lattice exactly; hub outranks leaves") {
     // path 1-2-3-4 plus a hub 5 touching every path node, and a random
     // graph: the Spark loop must equal a plain-Scala replay of the SAME

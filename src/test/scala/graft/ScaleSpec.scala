@@ -66,13 +66,7 @@ class ScaleSpec extends SparkSpec {
   test("bucketed tables join without an exchange") {
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      for (tbl <- Seq("orders_b", "lineitem_b")) {
-        spark.sql(s"DROP TABLE IF EXISTS $tbl")
-        val loc = new java.io.File(s"spark-warehouse/$tbl")
-        if (loc.exists()) {
-          loc.listFiles().foreach(_.delete()); loc.delete()
-        }
-      }
+      for (tbl <- Seq("orders_b", "lineitem_b")) spark.sql(s"DROP TABLE IF EXISTS $tbl")
       Scale.writeBucketed(Tables.t(spark, sf, "orders"), "orders_b", "o_orderkey", 4)
       Scale.writeBucketed(
         Tables.t(spark, sf, "lineitem").select("l_orderkey", "l_quantity"),
@@ -397,6 +391,22 @@ class ScaleSpec extends SparkSpec {
     intercept[IllegalStateException] {
       Ckpt.stamp(df.repartition(n, col("k")).coalesce(2), n, "k")
     }
+  }
+
+  test("volume-aware widths: a leaf with no size estimate reads the floor, not the width cap") {
+    // an RDD-backed leaf reports sizeInBytes = Long.MaxValue (Spark's
+    // "unknown"); read as bytes it would ask for 2^20 partitions
+    val rddBacked = spark.sparkContext.parallelize(Seq(1L, 2L, 3L)).toDF("x")
+    assert(rddBacked.queryExecution.optimizedPlan.collectLeaves()
+      .exists(_.stats.sizeInBytes >= Long.MaxValue), "fixture lost its sentinel leaf")
+    assert(Ckpt.wide(rddBacked) === Ckpt.wide(spark))
+    assert(Ckpt.textPar(rddBacked) === Ckpt.textPar(spark))
+    // mixed with a real parquet leaf, the unknown side still reads the floor
+    val mixed = Tables.t(spark, sf, "orders").select(col("o_orderkey").as("x"))
+      .union(rddBacked)
+    assert(Ckpt.wide(mixed) === Ckpt.wide(spark))
+    // a sized leaf keeps the byte-scaled path (tiny here, so the floor)
+    assert(Ckpt.wide(Tables.t(spark, sf, "orders")) === Ckpt.wide(spark))
   }
 
   test("onion layers: a planted deep-peel graph labels the unreached remainder CORE, never mis-layers it") {

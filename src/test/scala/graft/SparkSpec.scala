@@ -11,8 +11,14 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   lazy val session: SparkSession = {
+    // A warehouse per JVM: saveAsTable leaves table directories behind,
+    // and the next JVM's empty catalog cannot drop them, so its write
+    // would fail with LOCATION_ALREADY_EXISTS.
+    val warehouse = java.nio.file.Files.createTempDirectory("graft-warehouse").toFile
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(warehouse))
     val s = SparkSession.builder()
       .master("local[4]")
+      .config("spark.sql.warehouse.dir", warehouse.getAbsolutePath)
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
