@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan inspection utility: `runMain graft.Explain [query ...]` prints the
   * formatted physical plan for each named query (default: a representative
   * set) against sf0.01 — used to audit pushdown, pruning, join strategy
@@ -43,12 +41,10 @@ object Explain {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    // the width the PlanAuditSpec pins and the committed PLANS_r* are planned at
+    val spark = Harness.session(4)
     spark.sparkContext.setLogLevel("ERROR")
-    val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+    val dir = Harness.sfDir("/root/testdata/sf0.01")
     val (outDir, requested) = args.toSeq match {
       case "--out" +: d +: rest if !d.startsWith("--") => (Some(d), rest)
       case rest if rest.contains("--out") =>

@@ -1,18 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** End-to-end check of the production extension path: a fresh session
   * built with `.withExtensions(new GraftExtensions)` must resolve graft's
   * SQL functions. Run in its own JVM (`runMain graft.ExtensionsCheck`) so
   * no previously-created session can mask a broken registration. */
 object ExtensionsCheck {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
+    val spark = Harness.builder(2).withExtensions(new GraftExtensions).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val viaSql = spark.sql("SELECT rolling_hash('graft') AS h").head().getLong(0)
     val direct = functions.RollingHash.hashBytes("graft".getBytes("UTF-8"))

@@ -9,9 +9,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *
   * {{{ spark.sql.extensions=graft.GraftExtensions }}}
   *
-  * or programmatically `SparkSession.builder().withExtensions(new
-  * GraftExtensions)`. (`SketchQueries.register` is the per-session
-  * equivalent used by the test harness.)
+  * or programmatically on a session builder, `.withExtensions(new
+  * GraftExtensions)` (as `ExtensionsCheck` does). (`SketchQueries.register`
+  * is the per-session equivalent used by the test harness.)
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

@@ -1,27 +1,19 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
-/** Ad-hoc per-JOB wall-time profiler for single queries — NOT part of the
-  * driver contract (same class as [[Probe]]). `runMain graft.Prof q1,q2`
-  * runs each query once untimed (warm-up) and once timed, printing every
-  * Spark job of the timed run with its wall time, task count and call
-  * site, so a heavy query's seconds can be attributed to a specific
-  * round/stage instead of guessed at. */
+/** Ad-hoc per-JOB wall-time profiler for single queries — not part of the
+  * correctness or bench contract. `runMain graft.Prof q1,q2` runs each
+  * query ([[Harness.select]]) once untimed (warm-up) and once timed,
+  * printing every Spark job of the timed run with its wall time, task
+  * count and call site, so a heavy query's seconds can be attributed to a
+  * specific round/stage instead of guessed at. `graft.Explain` prints the
+  * plans. */
 object Prof {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.sql.files.maxPartitionBytes", "1m")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = Harness.sfDir("/root/testdata/sf0.1")
+    val names = Harness.select(args.toSeq)
+    val spark = Harness.session(Harness.cores)
 
     final case class JobRec(id: Int, start: Long, var end: Long,
       var tasks: Int, desc: String)
@@ -50,16 +42,8 @@ object Prof {
         }
     }
 
-    val showPlan = sys.env.get("PROF_PLAN").contains("1")
-    def run(name: String): Unit = {
-      val qe = SparkEntry.queries(name)(spark, sfDir).queryExecution
-      qe.toRdd.count()
-      if (showPlan) println(qe.executedPlan.toString.take(20000))
-    }
-
-    val names = args.headOption.map(_.split(',').toSeq)
-      .getOrElse(sys.env.getOrElse("SPARK_GRAFT_QUERIES", "q01_agg_summary").split(',').toSeq)
-      .map(_.trim).filter(SparkEntry.queries.contains)
+    def run(name: String): Unit =
+      SparkEntry.queries(name)(spark, sfDir).queryExecution.toRdd.count()
 
     names.foreach { n =>
       try run(n) catch { case e: Throwable => println(s"WARMUP FAIL $n: $e") }

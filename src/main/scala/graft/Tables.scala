@@ -65,8 +65,8 @@ object Ckpt {
   /** Explicit exchange widths for operator-internal repartitions (always
     * derived from defaultParallelism — never a constant, so the driver's
     * lower-core-count scaling runs and a real cluster both see
-    * proportionate widths). Two tiers, probed on the bench harness
-    * (graft.Probe, r14): task dispatch costs ~5-8 ms here, so a LIGHT
+    * proportionate widths). Two tiers, measured on the bench harness
+    * (r14, sf0.1/local[32]): task dispatch costs ~5-8 ms here, so a LIGHT
     * exploded-text stage (~0.25-0.6 s of md5/window work at gate scale)
     * runs fastest at ~cores/4 (trigram+md5+min pipeline: p32 0.46 s,
     * p6-p8 0.25-0.31 s, p1 0.48 s), while HEAVY fan-outs (multi-second

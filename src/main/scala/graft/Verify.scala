@@ -1,27 +1,22 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each selected SparkEntry.queries result → parquet,
+  * plus oracle_sql.json, for the DuckDB compare in `tools/check.py`.
+  * `runMain graft.Verify <sfDir> <outDir> [query ...]`; the queries are
+  * chosen by [[Harness.select]]. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    if (args.length < 2) {
+      System.err.println("usage: Verify <sfDir> <outDir> [query ...]")
+      sys.exit(2)
+    }
+    val Seq(sfDir, outDir) = args.toSeq.take(2)
+    val selected = Harness.select(args.toSeq.drop(2))
+    val spark = Harness.session(Harness.cores)
     new java.io.File(outDir).mkdirs()
-    // builder-local iteration aid: comma-separated subset (driver unset)
-    val only = sys.env.get("SPARK_GRAFT_QUERIES")
-      .map(_.split(",").map(_.trim).toSet)
-    val selected = SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+    val queries = SparkEntry.queries
+    selected.foreach { name =>
+      try queries(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")

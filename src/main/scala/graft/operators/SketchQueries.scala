@@ -646,7 +646,7 @@ object SketchQueries {
     * data-side probe join), so the r3 localCheckpoint had become pure
     * overhead — and THAT (+0.55 s measured) was the r3 0.45→1.34 s bench
     * movement, not the nprobe doubling (nprobe 1 vs 2 probe within noise;
-    * graft.Probe, sf0.1 / local[32], full query ≈1.03 s checkpoint-free).
+    * measured r14 at sf0.1 / local[32], full query ≈1.03 s checkpoint-free).
     * Two literal-codebook zero-shuffle assignment variants were measured
     * and REJECTED: array_max over (dot, cid) structs is CodegenFallback,
     * dragging the 512-term dot subtree onto the interpreted per-row path

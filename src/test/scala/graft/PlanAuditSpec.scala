@@ -94,8 +94,8 @@ class PlanAuditSpec extends SparkSpec {
     * dedupe identical subtrees, so a pin is an upper bound on work.
     * Iterative queries (dedup_cluster & co.) pin their RETURNED plan —
     * the per-round loop bodies run at build time behind checkpoints.
-    * Since r8 every SparkEntry query is pinned (sweep via
-    * `runMain graft.PlanCount`). */
+    * Since r8 every SparkEntry query is pinned; the coverage test below
+    * prints the measured count of any query that lacks a pin. */
   private val maxExchanges: Map[String, Int] = Map(
     "q01_agg_summary" -> 1, // one partial-aggregated shuffle
     "q03_join_agg" -> 1, // both dims broadcast; one agg shuffle
@@ -322,7 +322,7 @@ class PlanAuditSpec extends SparkSpec {
     "events_value_drift" -> 3, // checkpointed shares: full-outer half legs + type fold
     "occ_range_fragmentation" -> 1, // ONE (species) group exchange; union-find per bounded ≤649-cell group (sync-CC variant was 8.5 s)
     "meta_hash_chain" -> 2, // shard chain agg + single-row root fold over its checkpoint
-    // ---- r8 sweep: the previously-unpinned 73 (counts from PlanCount) ----
+    // ---- r8 sweep: the previously-unpinned 73 (measured planned counts) ----
     "cleaning_summary" -> 3, // dedup window + two funnel rollups; centroid BNLJ whitelisted
     "clim_annotate" -> 1, // broadcast climate-cell join; ONE agg shuffle
     "clim_summary" -> 2, // broadcast cell join; species agg + summary rollup
@@ -549,9 +549,14 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("every query carries an exchange pin and every pin names a real query") {
-    val missing = SparkEntry.queries.keys.filterNot(maxExchanges.contains)
+    // A missing pin is reported with the count measured here, at the
+    // spec's own sf and core count, so the new pin is the gate's reading.
+    val missing = SparkEntry.queries.toSeq.sortBy(_._1).collect {
+      case (name, q) if !maxExchanges.contains(name) =>
+        s"$name -> ${shuffleCount(q(spark, sf).queryExecution.executedPlan.toString)}"
+    }
     assert(missing.isEmpty,
-      s"queries without an exchange pin (add via PlanCount): ${missing.mkString(", ")}")
+      s"queries without an exchange pin (name -> measured count): ${missing.mkString(", ")}")
     val stale = maxExchanges.keys.filterNot(SparkEntry.queries.contains)
     assert(stale.isEmpty, s"pins for unknown queries: ${stale.mkString(", ")}")
   }

@@ -34,25 +34,16 @@ class PlansSpec extends SparkSpec {
     // join, AQE skew handling on — the final adaptive plan must mark the
     // join skew=true and read the hot side through a skewed
     // AQEShuffleRead (the runtime split of the oversized partition).
-    val conf = spark.conf
-    val saved = Seq("spark.sql.adaptive.enabled",
-      "spark.sql.adaptive.skewJoin.enabled",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-      "spark.sql.adaptive.coalescePartitions.enabled",
-      "spark.sql.autoBroadcastJoinThreshold")
-      .map(k => k -> conf.getOption(k)).toMap
-    conf.set("spark.sql.adaptive.enabled", "true")
-    conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-    // test-scale thresholds: the defaults (factor 5, 256 MB) are sized
-    // for production partitions; the MECHANISM is what's under test
-    conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-    conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "64KB")
-    conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "32KB")
-    conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConfs(
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.adaptive.skewJoin.enabled" -> "true",
+      // test-scale thresholds: the defaults (factor 5, 256 MB) are sized
+      // for production partitions; the MECHANISM is what's under test
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "64KB",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "32KB",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       def skewedJoin() = {
         val big = spark.range(0, 300000).select(
           when(col("id") < 250000, 0L).otherwise(col("id") % 32).as("k"),
@@ -69,12 +60,11 @@ class PlansSpec extends SparkSpec {
       assert(plan.contains("AQEShuffleRead skewed"),
         "the hot side was not read through a skewed AQEShuffleRead")
       // identical results with the skew handling off
-      conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
-      val without = skewedJoin().collect()
+      val without = withConfs("spark.sql.adaptive.skewJoin.enabled" -> "false") {
+        skewedJoin().collect()
+      }
       assert(withSkew.map(_.toString).sorted.toSeq ===
         without.map(_.toString).sorted.toSeq)
-    } finally saved.foreach { case (k, v) =>
-      v.fold(conf.unset(k))(conf.set(k, _))
     }
   }
 
@@ -141,16 +131,6 @@ class PlansSpec extends SparkSpec {
       .select("event_id", "promo_id").as[(Long, Long)].collect().toSet
     assert(manual === naive)
     assert(manual.nonEmpty)
-  }
-
-  private def withConfs[T](pairs: (String, String)*)(body: => T): T = {
-    val conf = spark.conf
-    val saved = pairs.map { case (k, _) => k -> conf.getOption(k) }
-    pairs.foreach { case (k, v) => conf.set(k, v) }
-    try body finally saved.foreach {
-      case (k, Some(v)) => conf.set(k, v)
-      case (k, None)    => conf.unset(k)
-    }
   }
 
   test("dynamic partition pruning: a star join on a partitioned fact scans only the dim-selected partitions") {

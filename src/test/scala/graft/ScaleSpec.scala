@@ -64,8 +64,7 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("bucketed tables join without an exchange") {
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConfs("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       for (tbl <- Seq("orders_b", "lineitem_b")) spark.sql(s"DROP TABLE IF EXISTS $tbl")
       Scale.writeBucketed(Tables.t(spark, sf, "orders"), "orders_b", "o_orderkey", 4)
       Scale.writeBucketed(
@@ -77,7 +76,7 @@ class ScaleSpec extends SparkSpec {
       assert(!plan.contains("Exchange"), s"expected no shuffle, got:\n$plan")
       assert(joined.count() ===
         Tables.t(spark, sf, "lineitem").count()) // FK: every lineitem matches
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
+    }
   }
 
   test("degenerate 100k-identical corpus: winnow + containment + fuzzy pair gens stay bounded") {

@@ -19,11 +19,10 @@ class SketchSpec extends SparkSpec {
     val viaSql = df.selectExpr("rolling_hash(text)").as[Long].collect()
     assert(viaSql.toSeq === Seq("alpha", "beta gamma", "").map(s => ref(s)))
     // interpreted path (codegen disabled) must agree
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    try {
+    withConfs("spark.sql.codegen.wholeStage" -> "false") {
       val interp = df.selectExpr("rolling_hash(text)").as[Long].collect()
       assert(interp.toSeq === viaSql.toSeq)
-    } finally spark.conf.set("spark.sql.codegen.wholeStage", "true")
+    }
   }
 
   test("token_count expression matches the regex tokenizer on real docs") {
@@ -49,10 +48,9 @@ class SketchSpec extends SparkSpec {
     val native = graft.functions.Vectors.dot(col("a"), col("b"))
     assert(pairs.select((unrolled === native).as("eq")).where(!col("eq")).count() === 0)
     // interpreted path (codegen disabled) must agree bit-for-bit too
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    try {
+    withConfs("spark.sql.codegen.wholeStage" -> "false") {
       assert(pairs.select((unrolled === native).as("eq")).where(!col("eq")).count() === 0)
-    } finally spark.conf.set("spark.sql.codegen.wholeStage", "true")
+    }
   }
 
   test("minhash LSH finds exact duplicates with est_jaccard 1.0") {
@@ -399,9 +397,9 @@ class SketchSpec extends SparkSpec {
     val df = Seq("alpha beta gamma " * 10, "").toDF("text")
     val viaSql = df.selectExpr("cdc_chunks(text) AS ls").as[Seq[Int]].collect()
     assert(viaSql.toSeq === Seq(ref("alpha beta gamma " * 10), Seq.empty))
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    try assert(df.selectExpr("cdc_chunks(text) AS ls").as[Seq[Int]].collect().toSeq === viaSql.toSeq)
-    finally spark.conf.set("spark.sql.codegen.wholeStage", "true")
+    withConfs("spark.sql.codegen.wholeStage" -> "false") {
+      assert(df.selectExpr("cdc_chunks(text) AS ls").as[Seq[Int]].collect().toSeq === viaSql.toSeq)
+    }
   }
 
   test("knn graph: <=5 neighbors per vector, dot descending, symmetric candidates") {

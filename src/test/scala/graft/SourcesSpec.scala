@@ -31,13 +31,8 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("keyed source: storage-partitioned join runs with ZERO shuffles and exact results") {
-    val conf = spark.conf
-    val saved = Seq("spark.sql.sources.v2.bucketing.enabled",
-      "spark.sql.autoBroadcastJoinThreshold")
-      .map(k => k -> conf.getOption(k)).toMap
-    conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-    conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force the SPJ path
-    try {
+    withConfs("spark.sql.sources.v2.bucketing.enabled" -> "true",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") { // force the SPJ path
       def read(seed: Long) = spark.read.format("graft.sources.KeyedSource")
         .option("groups", 8).option("rowsPerGroup", 100)
         .option("seed", seed).load()
@@ -63,8 +58,6 @@ class SourcesSpec extends SparkSpec {
       val agg = read(3L).groupBy("grp").agg(sum("v_milli").as("s"))
       assert(!agg.queryExecution.executedPlan.toString.contains("Exchange"))
       assert(agg.count() === 8)
-    } finally saved.foreach { case (k, v) =>
-      v.fold(conf.unset(k))(conf.set(k, _))
     }
   }
 
@@ -76,14 +69,10 @@ class SourcesSpec extends SparkSpec {
     // partition values are aligned and the join stays ZERO-exchange;
     // with it disabled the partitionings are incompatible and the plan
     // falls back to a two-exchange shuffle join — both pinned here.
-    val conf = spark.conf
-    val saved = Seq("spark.sql.sources.v2.bucketing.enabled",
-      "spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.sources.v2.bucketing.pushPartValues.enabled")
-      .map(k => k -> conf.getOption(k)).toMap
-    conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-    conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    val pushPartValues = "spark.sql.sources.v2.bucketing.pushPartValues.enabled"
+    withConfs("spark.sql.sources.v2.bucketing.enabled" -> "true",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      pushPartValues -> "true") {
       def read(groups: Int, seed: Long) =
         spark.read.format("graft.sources.KeyedSource")
           .option("groups", groups).option("rowsPerGroup", 50)
@@ -92,7 +81,6 @@ class SourcesSpec extends SparkSpec {
         .join(read(16, 2L).select(col("grp"), col("v_milli").as("vb")), Seq("grp"))
         .groupBy("grp").agg(count(lit(1)).as("n_pairs"),
           sum(expr("va + vb")).as("sv"))
-      conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
       val j = mismatched()
       assert(!j.queryExecution.executedPlan.toString.contains("Exchange"),
         "partially-clustered SPJ planned a shuffle with pushPartValues on")
@@ -109,15 +97,14 @@ class SourcesSpec extends SparkSpec {
       assert(got === expected)
       // the fallback: without pushed partition values the 8- and 16-group
       // KeyGroupedPartitionings are incompatible -> shuffle both sides
-      conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "false")
-      val off = mismatched()
-      val nEx = "Exchange".r
-        .findAllIn(off.queryExecution.executedPlan.toString).length
-      assert(nEx === 2, s"expected the two-exchange fallback, got $nEx")
-      assert(off.collect().map(r =>
-        r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap === expected)
-    } finally saved.foreach { case (k, v) =>
-      v.fold(conf.unset(k))(conf.set(k, _))
+      withConfs(pushPartValues -> "false") {
+        val off = mismatched()
+        val nEx = "Exchange".r
+          .findAllIn(off.queryExecution.executedPlan.toString).length
+        assert(nEx === 2, s"expected the two-exchange fallback, got $nEx")
+        assert(off.collect().map(r =>
+          r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap === expected)
+      }
     }
   }
 
@@ -130,16 +117,9 @@ class SourcesSpec extends SparkSpec {
     // partiallyClusteredDistribution.enabled the other side's matching
     // partition is REPLICATED across the splits instead — still
     // zero-exchange, more tasks for the hot key.
-    val conf = spark.conf
-    val saved = Seq("spark.sql.sources.v2.bucketing.enabled",
-      "spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.sources.v2.bucketing.pushPartValues.enabled",
-      "spark.sql.sources.v2.bucketing.partiallyClusteredDistribution.enabled")
-      .map(k => k -> conf.getOption(k)).toMap
-    conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-    conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
-    try {
+    withConfs("spark.sql.sources.v2.bucketing.enabled" -> "true",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true") {
       def skewed() = spark.read.format("graft.sources.KeyedSource")
         .option("groups", 8).option("rowsPerGroup", 64)
         .option("seed", 1L).option("skewSplits", 4).load()
@@ -171,12 +151,10 @@ class SourcesSpec extends SparkSpec {
         assert(got === expected)
         j.rdd.getNumPartitions
       }
-      conf.set("spark.sql.sources.v2.bucketing" +
-        ".partiallyClusteredDistribution.enabled", "false")
-      val nGrouped = check()
-      conf.set("spark.sql.sources.v2.bucketing" +
-        ".partiallyClusteredDistribution.enabled", "true")
-      val nPartial = check()
+      val partiallyClustered =
+        "spark.sql.sources.v2.bucketing.partiallyClusteredDistribution.enabled"
+      val nGrouped = withConfs(partiallyClustered -> "false")(check())
+      val nPartial = withConfs(partiallyClustered -> "true")(check())
       info(s"join task counts: grouped=$nGrouped partiallyClustered=$nPartial")
       // grouped posture: one task per key = 8; partially clustered keeps
       // group 0's splits separate (8 + 4-1 = 11)
@@ -184,8 +162,6 @@ class SourcesSpec extends SparkSpec {
       assert(nPartial > nGrouped,
         s"partiallyClustered should keep the skewed splits parallel " +
           s"(grouped=$nGrouped, partial=$nPartial)")
-    } finally saved.foreach { case (k, v) =>
-      v.fold(conf.unset(k))(conf.set(k, _))
     }
   }
 

@@ -7,23 +7,22 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   val sf = "/root/testdata/sf0.001"
+
+  /** Runs `body` with the given session confs set, then restores each to
+    * its previous value (or unsets it if it had none). */
+  def withConfs[T](pairs: (String, String)*)(body: => T): T = {
+    val conf = spark.conf
+    val saved = pairs.map { case (k, _) => k -> conf.getOption(k) }
+    pairs.foreach { case (k, v) => conf.set(k, v) }
+    try body finally saved.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None)    => conf.unset(k)
+    }
+  }
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    // A warehouse per JVM: saveAsTable leaves table directories behind,
-    // and the next JVM's empty catalog cannot drop them, so its write
-    // would fail with LOCATION_ALREADY_EXISTS.
-    val warehouse = java.nio.file.Files.createTempDirectory("graft-warehouse").toFile
-    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(warehouse))
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.warehouse.dir", warehouse.getAbsolutePath)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** The harness profile at 4 cores: the PlanAuditSpec pins are planned
+    * at that width. */
+  lazy val session: SparkSession = Harness.session(4)
 }

@@ -440,15 +440,14 @@ class TextPrepSpec extends SparkSpec {
       assert(g.map(_._3).sorted.toSeq === (1L to g.length.toLong),
         s"shard $sh positions not dense")
     // non-default shard count via the production knob: same invariants
-    spark.conf.set("graft.shuffle.shards", "13")
-    try {
+    withConfs("graft.shuffle.shards" -> "13") {
       val o = TextPrep.dataShuffleShards(spark, sf).as[(Long, Long, Long)].collect()
       assert(o.length.toLong === n)
       assert(o.forall { case (_, sh, _) => sh >= 0 && sh < 13 })
       for ((sh, g) <- o.groupBy(_._2))
         assert(g.map(_._3).sorted.toSeq === (1L to g.length.toLong),
           s"override shard $sh positions not dense")
-    } finally spark.conf.unset("graft.shuffle.shards")
+    }
   }
 
   test("shard count keeps scaling on a 20k-doc corpus (derived parallelism)") {

@@ -7,6 +7,8 @@ Usage: python3 tools/check.py <sfDir> <verifyOutDir> [--json OUT.json]
 
 --json writes a per-query machine-readable artifact (the committed
 CORRECTNESS_SF01_r{N}.json shape: pass flag + row count + error note).
+
+Exits 1 if any query fails, or if oracle_sql.json names no query at all.
 """
 import json
 import sys
@@ -85,8 +87,11 @@ for name, sql in sorted(oracle.items()):
         results[name] = {"pass": False, "rows": len(got), "err": "value mismatch"}
 
 print(f"\n{n_pass} pass / {n_fail} fail")
+checked = n_pass + n_fail
+if not checked:
+    print(f"FAIL: {out_dir}/oracle_sql.json names no query, nothing was checked")
 if json_out:
     with open(json_out, "w") as f:
         json.dump({"sf_dir": sf_dir, "n_pass": n_pass, "n_fail": n_fail,
                    "queries": results}, f, indent=1, sort_keys=True)
-sys.exit(1 if n_fail else 0)
+sys.exit(1 if n_fail or not checked else 0)
