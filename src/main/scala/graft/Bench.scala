@@ -61,8 +61,16 @@ object Bench {
     val settleCapped = startL1 > 1.0 || startL15 > 1.5
 
     // Untimed warm-up pass: JIT, codegen caches, parquet footers, file
-    // listing — so the timed pass measures steady-state query time.
-    names.foreach { n => try run(n) catch { case _: Throwable => } }
+    // listing — so the timed pass measures steady-state query time. It is
+    // also the compile census: each query's Janino compilations in the
+    // pass (the codegen cache is warm for what earlier queries compiled).
+    def compiles: Long = org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME.getCount
+    val compileCounts = names.map { n =>
+      val c0 = compiles
+      try run(n) catch { case _: Throwable => }
+      n -> (compiles - c0)
+    }
     System.gc()
 
     // Min of two timed runs: steady-state time, robust to JIT/GC noise.
@@ -122,6 +130,7 @@ object Bench {
     val thirdFailed = arr(results.filter(_.thirdFailed).map(_.name))
     val gcs = obj(results.map(r => r.name -> r.gcMs.toString))
     val peaks = obj(results.map(r => r.name -> r.peakMb.toString))
+    val codegen = obj(compileCounts.map { case (n, c) => n -> c.toString })
     val errors = arr(results.filter(_.min2 < 0).map(_.name))
     val total = results.map(_.min2).filter(_ >= 0).sum
     // Key order matters for crash/truncation forensics: the harness that
@@ -135,7 +144,7 @@ object Bench {
     val load = java.lang.management.ManagementFactory.getOperatingSystemMXBean
       .getSystemLoadAverage
     val env = s""""load_avg":${fmt(load)},"load1":${fmt(startL1)},"load5":${fmt(startL5)},"load15":${fmt(startL15)},"settle_s":${fmt(settleS)},"settle_capped":$settleCapped,"epoch_ms":${System.currentTimeMillis()},"cpus":"$cpus""""
-    val json = s"""{"metric":"total","unit":"sec","sf":"$sfDir",$env,"queries":$qs,"med3":$med3s,"spread_flags":$spreadFlags,"third_failed":$thirdFailed,"gc_ms":$gcs,"peak_mb":$peaks,"errors":$errors,"value":${fmt(total)}}"""
+    val json = s"""{"metric":"total","unit":"sec","sf":"$sfDir",$env,"queries":$qs,"med3":$med3s,"spread_flags":$spreadFlags,"third_failed":$thirdFailed,"gc_ms":$gcs,"peak_mb":$peaks,"codegen_compiles":$codegen,"errors":$errors,"value":${fmt(total)}}"""
     // Durable copy: survives any stdout/stderr truncation. A subset run
     // (isolation protocol) writes BENCH_SUBSET.json —
     // it must NEVER clobber the sealed full-suite artifact (a judge

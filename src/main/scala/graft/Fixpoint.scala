@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, Observation}
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
+import org.apache.spark.sql.functions.typedLit
 
 /** The round loop every iterative operator runs: fixed-round peels and
   * relaxations, convergence loops, and greedy per-round picks.
@@ -23,6 +26,19 @@ import org.apache.spark.sql.{Column, DataFrame, Observation}
   *    rounds hold 2^f (or 3^f) copies of the checkpoint leaf, so f ≥ 3
   *    pays more planning than it saves (probed);
   *  - a loop that reads a convergence value every round fuses 1.
+  *
+  * GREEDY. A loop whose state is a function of the picks so far needs no
+  * state checkpoint at all ([[greedy]]): the caller materializes one
+  * input once, and each round is one aggregate over it that ends in a
+  * driver read of the round's pick.
+  *
+  * ROUND INVARIANCE. Every round that plans the same operators over the
+  * same leaf should generate the same code, so that Spark's codegen cache
+  * serves rounds 2..k and they compile nothing. Round-varying values must
+  * therefore enter the plan as non-primitive literals (arrays, maps,
+  * strings), which generated code reads by reference; a primitive literal
+  * (an `isin` list, a replace per pick, a `size(picks)` the optimizer
+  * folds) is inlined into the source and makes every round's class new.
   */
 object Fixpoint {
 
@@ -64,22 +80,45 @@ object Fixpoint {
     used
   }
 
+  /** Greedy selection of `k` picks. Round r (0-based) gets the keys of
+    * the r picks so far as ONE array literal (`typedLit`, so the round's
+    * generated code does not depend on them) and returns a plan whose
+    * first row, if any, is the round's pick; `key` reads the pick's key
+    * from that row. `round` must plan one aggregate over an input the
+    * caller materialized once, and must not fold the literal into a
+    * primitive (no `size(picks)`). Returns the k pick rows. A round with
+    * no row left means the pool is smaller than `k`: a named error
+    * `<name>_<r>`, never a short or padded result. */
+  def greedy[K: TypeTag](name: String, k: Int)(key: Row => K)(
+      round: Column => DataFrame): Seq[Row] = {
+    val picks = scala.collection.mutable.ArrayBuffer.empty[Row]
+    while (picks.size < k) {
+      val r = picks.size
+      val got = round(typedLit(picks.map(key).toSeq)).head(1)
+      if (got.isEmpty) throw new IllegalStateException(
+        s"greedy round '${name}_$r' found no pick: the pool holds $r of the $k picks")
+      picks += got.head
+    }
+    picks.toSeq
+  }
+
   /** Checkpoints `df` with `metrics` observed on the checkpoint action
     * (one job for both) and returns the checkpoint and the metric values
-    * by name. A metric over no rows reads null; that is a named error,
-    * never a silent zero. */
+    * by name. The metric fires because `localCheckpoint` runs through
+    * `withAction`, so it has arrived when the checkpoint returns; a
+    * bounded wait on the observation's own future guards the read, and a
+    * metric that has not arrived within 10 s is a named error (a bare
+    * `obs.get` would block forever). A metric over no rows reads null;
+    * that is a named error too, never a silent zero. */
   def observe(df: DataFrame, name: String, metrics: Column*)
       : (DataFrame, Map[String, Any]) = {
     val obs = Observation(name)
     val ck = Ckpt.capped(df.observe(obs, metrics.head, metrics.tail: _*))
-    // The metric fires only because localCheckpoint runs through
-    // withAction on Spark 4.1.2, and a bare obs.get blocks forever if it
-    // never fires; so wait boundedly and fall back to scanning the
-    // just-materialized checkpoint.
-    val got = awaitMetric(obs).getOrElse {
-      val r = ck.agg(metrics.head, metrics.tail: _*).head()
-      r.getValuesMap[Any](r.schema.fieldNames.toSeq)
-    }
+    val row = org.apache.spark.sql.GraftStatsCheckpoint
+      .observedRow(obs, ObserveTimeout)
+      .getOrElse(throw new IllegalStateException(
+        s"observation '$name': no metrics within $ObserveTimeout of its checkpoint action"))
+    val got = row.getValuesMap[Any](row.schema.fieldNames.toSeq)
     got.collectFirst { case (field, null) => field }.foreach { field =>
       throw new IllegalStateException(
         s"observation '$name': metric '$field' is null (observed over no rows)")
@@ -87,20 +126,5 @@ object Fixpoint {
     (ck, got)
   }
 
-  /** obs.get with a 10 s ceiling; None on timeout. Each call gets its
-    * own single-thread DAEMON executor, shut down on exit — parking the
-    * waiter on the fixed-size global EC would leak one pool thread per
-    * timeout, and after #cores timeouts every later call (even ones
-    * whose metric DID fire) would starve behind the dead waiters. */
-  private def awaitMetric(obs: Observation): Option[Map[String, Any]] = {
-    import scala.concurrent.{Await, ExecutionContext, Future, TimeoutException}
-    import scala.concurrent.duration._
-    val exec = java.util.concurrent.Executors.newSingleThreadExecutor(r => {
-      val t = new Thread(r, "graft-await-metric"); t.setDaemon(true); t
-    })
-    try Some(Await.result(
-      Future(obs.get)(ExecutionContext.fromExecutorService(exec)), 10.seconds))
-    catch { case _: TimeoutException => None }
-    finally exec.shutdownNow() // abandoned waiter dies with its own thread
-  }
+  private val ObserveTimeout = scala.concurrent.duration.Duration(10, "s")
 }

@@ -6440,12 +6440,17 @@ object Analytics {
     * Candidates come from a 32-vector md5-'fl:' pool (greedy over the
     * full corpus is O(n²·k) — the pool keeps every round one LINEAR
     * pass, the standard lazy-greedy concession, documented). Distances
-    * ride the kcenter 2^-20 integer lattice via ONE pre-computed
-    * n×32 d² relation (checkpointed — rounds re-read it, never the
-    * corpus); Σ d² is BIGINT-safe to ~32k vectors at 64 dims
-    * (n·64·2^42), divide-first per-x milli beyond. Driver state is the
-    * 6-row chosen list; each round's pick is observed on its checkpoint
-    * (O(K), the kcenter class). */
+    * ride the kcenter 2^-20 integer lattice; Σ d² is BIGINT-safe to ~32k
+    * vectors at 64 dims (n·64·2^42), divide-first per-x milli beyond.
+    *
+    * The state mind_x = min over picked c of d²(x, c) is a function of
+    * the picks, so the loop is [[graft.Fixpoint.greedy]]: ONE checkpoint
+    * holds, per vector, its d² to every pool candidate as an array (the
+    * size of an n×32 d² relation), and each round derives mind from the
+    * picks literal and sums least(mind, d²) per unpicked candidate — one
+    * aggregate, one shuffle, a driver read of the (tot, cand) minimum. A
+    * vector keeps counting only while it has a d² to every pick, as in
+    * the oracle's inner joins. Driver state is the 6-row chosen list. */
   def simFacilityLocation(s: SparkSession, dir: String): DataFrame = {
     val k = 6
     val INF = 1L << 62
@@ -6461,70 +6466,53 @@ object Analytics {
     val candComps = comps.join(broadcast(pool),
         comps("vec_id") === pool("cand"))
       .select(col("cand"), col("j"), col("xfp").as("cfp"))
-    val d2 = comps.join(broadcast(candComps), Seq("j"))
+    val d2s = comps.join(broadcast(candComps), Seq("j"))
       .filter(col("cand").isNotNull)
       .groupBy("vec_id", "cand")
       .agg(sum(expr("(xfp - cfp) * (xfp - cfp)")).as("d2"))
+      .groupBy("vec_id")
+      .agg(collect_list(struct(col("cand"), col("d2"))).as("ds"))
       .transform(graft.Ckpt.capped)
-    var cur = d2.select("vec_id").distinct()
-      .withColumn("mind", lit(INF))
-      .transform(graft.Ckpt.capped)
-    // r15: the per-round argmin no longer round-trips through its own
-    // driver collect — the 1-row winner (TakeOrdered over the 32-cand
-    // totals, same (tot, cand) ordering) is BROADCAST-joined into the
-    // next mind table, and its (cand, tot) values ride that checkpoint's
-    // materialization as OBSERVED metrics (min over constant columns), so
-    // ONE job per round materializes both the pick and the update
-    // (was: collect + checkpoint = two). Exclusion stays a literal isin
-    // over the driver-known picks — a relational anti-join would add a
-    // stage per previous round. A pool with fewer than k candidates
-    // leaves a round with no winner: its observed min is null, a named
-    // error.
-    val chosen = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-    graft.Fixpoint.converge("simFacilityLocation", k, fuse = 1,
-        raise = "the candidate pool") { (r, _) =>
-      val picked = chosen.map(_._2)
-      val base = d2.join(cur.select("vec_id", "mind"), Seq("vec_id"))
-        .groupBy("cand").agg(sum(least(col("mind"), col("d2"))).as("tot"))
-      val win = (if (picked.isEmpty) base
-                 else base.filter(!col("cand").isin(picked.toSeq: _*)))
+    val chosen = graft.Fixpoint.greedy("fl_round", k)(_.getLong(0)) { picks =>
+      d2s.filter(forall(picks, p => exists(col("ds"), x => x("cand") === p)))
+        .select(
+          aggregate(filter(col("ds"), x => array_contains(picks, x("cand"))),
+            lit(INF), (m, x) => least(m, x("d2"))).as("mind"),
+          explode(col("ds")).as("x"))
+        .filter(!array_contains(picks, col("x.cand")))
+        .groupBy(col("x.cand").as("cand"))
+        .agg(sum(least(col("mind"), col("x.d2"))).as("tot"))
         .orderBy("tot", "cand").limit(1)
-        .select(col("cand").as("wc"), col("tot").as("wt"))
-      val (next, m) = graft.Fixpoint.observe(cur.select("vec_id", "mind")
-          .join(d2, Seq("vec_id"))
-          .join(broadcast(win), col("cand") === col("wc"))
-          .select(col("vec_id"), least(col("mind"), col("d2")).as("mind"),
-            col("wc"), col("wt")),
-        s"fl_round_$r", min(col("wc")).as("wc"), min(col("wt")).as("wt"))
-      cur = next
-      chosen += ((r.toLong, m("wc").asInstanceOf[Long], m("wt").asInstanceOf[Long]))
-      chosen.size == k
     }
     import comps.sparkSession.implicits._
-    chosen.toSeq.toDF("round", "center_vec_id", "total_cost_fp")
+    chosen.zipWithIndex.map { case (r, i) => (i.toLong, r.getLong(0), r.getLong(1)) }
+      .toDF("round", "center_vec_id", "total_cost_fp")
   }
 
+  // Every CTE is MATERIALIZED: each cur{r} is read by both t{r+1} and
+  // cur{r+1}, and DuckDB inlining the six-round chain re-evaluates the d2
+  // joins until it runs out of memory.
   private val FACILITY_SQL: String = {
     val ctes = new StringBuilder(
-      """WITH c AS (
+      """WITH c AS MATERIALIZED (
         |  SELECT vec_id, p.i - 1 AS j,
         |    CAST(FLOOR(CAST(p.x AS DOUBLE) * 1048576) AS BIGINT) AS xfp
         |  FROM (SELECT vec_id,
         |          unnest(list_apply(embedding,
         |            (x, i) -> struct_pack(x := x, i := i))) AS p
         |        FROM embeddings)),
-        |pool AS (SELECT vec_id AS cand FROM (
+        |pool AS MATERIALIZED (SELECT vec_id AS cand FROM (
         |  SELECT vec_id, ROW_NUMBER() OVER (
         |    ORDER BY md5('fl:' || CAST(vec_id AS VARCHAR)), vec_id) AS rn
         |  FROM embeddings) WHERE rn <= 32),
-        |d2 AS (
+        |d2 AS MATERIALIZED (
         |  SELECT x.vec_id, cc.cand,
         |    CAST(SUM((x.xfp - cc.xfp) * (x.xfp - cc.xfp)) AS BIGINT) AS d2
         |  FROM c x JOIN (SELECT p.cand, c2.j, c2.xfp
         |                 FROM pool p JOIN c c2 ON c2.vec_id = p.cand) cc
         |    ON cc.j = x.j
         |  GROUP BY 1, 2),
-        |cur0 AS (SELECT DISTINCT vec_id,
+        |cur0 AS MATERIALIZED (SELECT DISTINCT vec_id,
         |           CAST(4611686018427387904 AS BIGINT) AS mind FROM c)"""
         .stripMargin)
     for (r <- 1 to 6) {
@@ -6534,10 +6522,10 @@ object Analytics {
           (1 until r).map(i => s"SELECT cand FROM t$i")
             .mkString(" UNION ALL ") + ")"
       ctes.append(s""",
-        |t$r AS (SELECT cand, CAST(SUM(LEAST(mind, d2)) AS BIGINT) AS tot
+        |t$r AS MATERIALIZED (SELECT cand, CAST(SUM(LEAST(mind, d2)) AS BIGINT) AS tot
         |        FROM d2 JOIN cur${r - 1} USING (vec_id) $excl
         |        GROUP BY cand ORDER BY tot, cand LIMIT 1),
-        |cur$r AS (SELECT cu.vec_id, LEAST(cu.mind, d.d2) AS mind
+        |cur$r AS MATERIALIZED (SELECT cu.vec_id, LEAST(cu.mind, d.d2) AS mind
         |          FROM cur${r - 1} cu JOIN d2 d ON d.vec_id = cu.vec_id
         |            AND d.cand = (SELECT cand FROM t$r))""".stripMargin)
     }

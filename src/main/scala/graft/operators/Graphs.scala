@@ -62,7 +62,7 @@ object Graphs {
     *    near-dup pair graphs, whose components are near-cliques
     *    (diameter 2-3).
     *  - `"big-star"`: alternating large-star/small-star contraction
-    *    ([[alternatingCC]]) — ~6 shuffles per round but rounds grow
+    *    ([[alternatingCC]]) — three shuffles per round but rounds grow
     *    LOGARITHMICALLY in component size, so a high-diameter graph
     *    (paths/grids: the occ_range_fragmentation patch-adjacency class,
     *    which needed maxIter 64 at sf0.1 under min-label) converges in
@@ -133,6 +133,7 @@ object Graphs {
     *  - SMALL-STAR keys each edge by its LARGER endpoint; each node
     *    links its smaller neighbors (and itself) to their minimum —
     *    flattening the partial trees large-star built.
+    * A round ([[starRound]]) plans three shuffles and no broadcast.
     * The joint fixpoint is a disjoint union of stars rooted at component
     * minima (large-star on any deeper chain emits a new shortcut edge,
     * so nothing else is stable). Convergence is detected by a
@@ -167,23 +168,8 @@ object Graphs {
     }
     val rounds = graft.Fixpoint.converge("alternatingCC", maxRounds, fuse = 1,
         raise = "maxRounds") { (r, _) =>
-      val sym = cur.select(col("u"), col("v"))
-        .union(cur.select(col("v").as("u"), col("u").as("v")))
-      // m = min of the CLOSED neighborhood; every emitted edge (v, m)
-      // has v > u >= m, so the (larger, smaller) orientation holds
-      val lmin = sym.groupBy("u").agg(min("v").as("nm"))
-        .select(col("u"), least(col("nm"), col("u")).as("m"))
-      val large = sym.join(lmin, Seq("u")).filter(col("v") > col("u"))
-        .select(col("v").as("u"), col("m").as("v")).distinct()
-      // small-star over the (larger, smaller)-oriented large output:
-      // all neighbors under key u are < u, so m < u strictly
-      val smin = large.groupBy("u").agg(min("v").as("m"))
-      val (small, m) = graft.Fixpoint.observe(
-        large.join(smin, Seq("u")).filter(col("v") =!= col("m"))
-          .select(col("v").as("u"), col("m").as("v"))
-          .union(smin.select(col("u"), col("m").as("v")))
-          .distinct(),
-        s"bigstar_$r", checksumCols: _*)
+      val (small, m) = graft.Fixpoint.observe(starRound(cur), s"bigstar_$r",
+        checksumCols: _*)
       val sum1 = checksum(m)
       val converged = sum1 == prev
       prev = sum1
@@ -195,6 +181,33 @@ object Graphs {
         Seq("node"), "left_outer")
       .select(col("node"), coalesce(col("root"), col("node")).as("cluster_id"))
     (labels, rounds)
+  }
+
+  /** One large-star + small-star round over the (larger, smaller)
+    * oriented edge set `cur` (u, v), as three shuffles and no broadcast:
+    * both minima are `min(v) over (partition by u)` windows, so neither
+    * star aggregates and joins back. Large-star's window keys the
+    * symmetrized edges by u; small-star's keys large-star's output by its
+    * new u; the closing distinct is the third. */
+  private[graft] def starRound(cur: DataFrame): DataFrame = {
+    val byU = Window.partitionBy("u")
+    // m = min of the CLOSED neighborhood; every emitted edge (v, m) has
+    // v > u >= m, so the (larger, smaller) orientation holds
+    val large = cur.select(col("u"), col("v"))
+      .union(cur.select(col("v").as("u"), col("u").as("v")))
+      .withColumn("m", least(min("v").over(byU), col("u")))
+      .filter(col("v") > col("u"))
+      .select(col("v").as("u"), col("m").as("v"))
+    // small-star over the large output: every neighbor under key u is
+    // < u, so its minimum sm < u strictly. Each edge (u, v) emits
+    // (v, sm) and (u, sm); only (v, sm) can be a self-loop (v = sm).
+    large.withColumn("sm", min("v").over(byU))
+      .select(explode(array(
+        struct(col("v").as("u"), col("sm").as("v")),
+        struct(col("u"), col("sm").as("v")))).as("e"))
+      .select(col("e.u").as("u"), col("e.v").as("v"))
+      .filter(col("u") =!= col("v"))
+      .distinct()
   }
 
   /** Premium supply-chain co-membership clusters — connected components

@@ -1547,10 +1547,13 @@ object TextPrep {
     * dict (vocab-sized, never corpus-sized — exactly how production BPE
     * trainers work), so the corpus is scanned ONCE for the word-count
     * aggregate (checkpointed) and each round is one pair-count hash agg
-    * + an O(1) argmax collect + a codegen'd string-replace projection.
+    * + an O(1) argmax collect ([[graft.Fixpoint.greedy]]). The word
+    * symbols are a function of the merges so far: each round folds the
+    * merges literal over every word, one replace per merge, so the
+    * round's plan — and its generated code — is the same in every round.
     *
     * Symbol sequences are encoded as TWO-SPACE-separated strings
-    * ("  a  b  c  ") so that the per-round merge is a single literal
+    * ("  a  b  c  ") so that each merge is a single literal
     * replace(" a  b " → " ab "): each occurrence keeps one space of the
     * surrounding separators on each side, so ADJACENT merge sites share
     * no characters and left-to-right non-overlapping replace() — the
@@ -1565,15 +1568,16 @@ object TextPrep {
     * cases. */
   private[graft] def bpeLearn(words: DataFrame, rounds: Int)
       : Seq[(Long, String, String, Long)] = {
-    var cur = words
+    val base = words
       .select(concat(lit("  "),
         regexp_replace(col("word"), "(.)", "$1  ")).as("s"), col("freq"))
       .transform(graft.Ckpt.capped) // re-scanned every round
-    val merges = scala.collection.mutable.ArrayBuffer
-      .empty[(Long, String, String, Long)]
-    for (r <- 1 to rounds) {
-      val top = cur
-        .select(col("freq"), split(trim(col("s")), "  ").as("l"))
+    val merges = graft.Fixpoint.greedy("bpe_round", rounds)(
+        r => (r.getString(0), r.getString(1))) { done =>
+      base
+        .select(col("freq"), split(trim(aggregate(done, col("s"), (s, m) =>
+          replace(s, concat(lit(" "), m("_1"), lit("  "), m("_2"), lit(" ")),
+            concat(lit(" "), m("_1"), m("_2"), lit(" "))))), "  ").as("l"))
         .filter(size(col("l")) >= 2) // sequence(0,-1) would DESCEND
         .select(col("freq"), explode(expr(
           "transform(sequence(0, size(l) - 2)," +
@@ -1581,15 +1585,10 @@ object TextPrep {
         .groupBy(col("p.a").as("a"), col("p.b").as("b"))
         .agg(sum("freq").as("c"))
         .orderBy(desc("c"), asc("a"), asc("b")).limit(1)
-        .collect()
-      require(top.nonEmpty, s"bpeLearn: no pairs left at round $r")
-      val (a, b, c) =
-        (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-      merges += ((r.toLong, a, b, c))
-      cur = cur.select(replace(col("s"),
-        lit(s" $a  $b "), lit(s" $a$b ")).as("s"), col("freq"))
     }
-    merges.toSeq
+    merges.zipWithIndex.map { case (m, i) =>
+      ((i + 1).toLong, m.getString(0), m.getString(1), m.getLong(2))
+    }
   }
 
   def textBpeLearn(s: SparkSession, dir: String): DataFrame = {
@@ -1669,14 +1668,17 @@ object TextPrep {
 
   /** The trainer core: returns (final cost table (piece, c, cost), the
     * checkpointed word dict) so the ENCODE path
-    * ([[textUnigramFertility]]) can segment with the learned pieces. */
+    * ([[textUnigramFertility]]) can segment with the learned pieces.
+    * Every round is one checkpoint of the vocab-sized cost table
+    * ([[graft.Fixpoint.fixed]], fuse 1) and plans five exchanges: the
+    * cost map's gather and broadcast, the piece recount, and the total's
+    * gather and broadcast (see [[emRound]]). */
   private[graft] def unigramCosts(words0: DataFrame, rounds: Int)
       : (DataFrame, DataFrame) = {
     val words = words0.transform(graft.Ckpt.capped) // re-scanned every round
     val chars = words.select(col("freq"),
       explode(expr("transform(sequence(1, length(word)), i -> substring(word, i, 1))"))
         .as("piece"))
-    val charUni = chars.select("piece").distinct()
     val bigrams0 = words.filter(length(col("word")) >= 2)
       .select(col("freq"),
         explode(expr("transform(sequence(1, length(word) - 1), i -> substring(word, i, 2))"))
@@ -1684,66 +1686,58 @@ object TextPrep {
       .groupBy("piece").agg(sum("freq").as("c"))
     val seed = chars.groupBy("piece").agg((sum("freq") + 1L).as("c"))
       .unionByName(bigrams0)
-    // M half: attach the exact-lattice cost (keeps c for the output leg).
-    // Checkpointed: each eStep references the cost table TWICE (singles +
-    // bigrams legs) and mStep references its input twice (total fold) —
-    // un-checkpointed, the 2-round plan tree multiplies to ~455 planned
-    // exchanges (the multi-reference replay landmine). The table is
-    // vocab-sized, so the checkpoint is O(|pieces|).
-    def mStep(pieceCounts: DataFrame): DataFrame = {
-      val tot = pieceCounts.agg(sum("c").as("T"))
-      pieceCounts.crossJoin(broadcast(tot))
-        .withColumn("cost", graft.functions.Log2Fp(col("T"), col("c")))
-        .select("piece", "c", "cost")
-        .transform(graft.Ckpt.capped)
-    }
-    // E half: Viterbi-segment every word with the current costs, recount
-    def eStep(cost: DataFrame): DataFrame =
-      viterbiSegment(words, cost)
-        .select(col("freq"),
-          explode(split(expr("trim(LEADING '|' FROM seg)"), "\\|")).as("piece"))
-        .groupBy("piece").agg(sum("freq").as("c"))
-    def mCounts(segCounts: DataFrame): DataFrame =
-      charUni.join(segCounts.filter(length(col("piece")) === 1),
-          Seq("piece"), "left_outer")
-        .select(col("piece"), (coalesce(col("c"), lit(0L)) + 1L).as("c"))
-        .unionByName(segCounts.filter(length(col("piece")) === 2))
-    var cost = mStep(seed)
-    for (_ <- 1 to rounds) cost = mStep(mCounts(eStep(cost)))
+    val cost = graft.Fixpoint.fixed(withCosts(seed).transform(graft.Ckpt.capped),
+      rounds, fuse = 1)(emRound(words, _))
     (cost, words)
+  }
+
+  /** M half: (piece, c) → (piece, c, cost) on the exact cost lattice. The
+    * piece counts are referenced twice (total and rows); the total rides
+    * a single-row broadcast. */
+  private def withCosts(pieceCounts: DataFrame): DataFrame = {
+    val tot = pieceCounts.agg(sum("c").as("T"))
+    pieceCounts.crossJoin(broadcast(tot))
+      .withColumn("cost", graft.functions.Log2Fp(col("T"), col("c")))
+      .select("piece", "c", "cost")
+  }
+
+  /** One EM round over the cost table (piece, c, cost): Viterbi-segment
+    * every word with the current costs (E), recount the pieces of the
+    * best segmentations freq-weighted, add-1-smooth the char universe —
+    * the table's own 1-char pieces, since chars never leave the vocab —
+    * and drop unused bigrams (M). The recount and the universe share one
+    * aggregate: universe rows count 0 and only guarantee presence. */
+  private[graft] def emRound(words: DataFrame, cost: DataFrame): DataFrame = {
+    val segPieces = viterbiSegment(words, cost)
+      .select(col("freq"),
+        explode(split(expr("trim(LEADING '|' FROM seg)"), "\\|")).as("piece"))
+    val universe = cost.filter(length(col("piece")) === 1)
+      .select(lit(0L).as("freq"), col("piece"))
+    withCosts(segPieces.unionByName(universe)
+      .groupBy("piece").agg(sum("freq").as("c"))
+      .select(col("piece"),
+        (col("c") + when(length(col("piece")) === 1, 1L).otherwise(0L)).as("c")))
   }
 
   /** The shared Viterbi leg: (word, freq, seg) with seg = '|'-joined
     * best pieces under `cost` (may carry one leading '|' — trimmed by
-    * consumers). See [[unigramCosts]] for the DP shape. */
+    * consumers). The cost table travels as ONE map value, gathered once
+    * and broadcast to the words; the DP looks up each position's single
+    * and bigram cost in it. See [[unigramCosts]] for the DP shape. */
   private def viterbiSegment(words: DataFrame, cost: DataFrame): DataFrame = {
       val INF = 1099511627776L // 2^40 — unreachable by any real path sum
-      val costB = broadcast(cost.select("piece", "cost"))
-      val sing = words
-        .select(col("word"), explode(expr("sequence(1, length(word))")).as("i"))
-        .withColumn("piece", expr("substring(word, i, 1)"))
-        .join(costB, Seq("piece")) // char universe never shrinks
-        .groupBy("word")
-        .agg(expr("transform(array_sort(collect_list(struct(i, cost))), x -> x.cost)")
-          .as("cs"))
-      val big = words.filter(length(col("word")) >= 2)
-        .select(col("word"), explode(expr("sequence(1, length(word) - 1)")).as("i"))
-        .withColumn("piece", expr("substring(word, i, 2)"))
-        .join(costB, Seq("piece"), "left_outer")
-        .withColumn("cost", coalesce(col("cost"), lit(INF)))
-        .groupBy("word")
-        .agg(expr("transform(array_sort(collect_list(struct(i, cost))), x -> x.cost)")
-          .as("cb"))
-      words.join(sing, Seq("word")).join(big, Seq("word"), "left_outer")
+      val costMap = cost.agg(
+        map_from_entries(collect_list(struct(col("piece"), col("cost")))).as("cm"))
+      words.crossJoin(broadcast(costMap))
         .select(col("word"), col("freq"), expr(
           s"""if(length(word) < 2, substring(word, 1, 1),
              |  aggregate(
              |    transform(sequence(2, length(word)), i -> named_struct(
-             |      'ds', element_at(cs, i),
-             |      'db', element_at(cb, i - 1),
+             |      'ds', cm[substring(word, i, 1)],
+             |      'db', coalesce(cm[substring(word, i - 1, 2)], ${INF}L),
              |      'ps', substring(word, i, 1),
              |      'pb', substring(word, i - 1, 2))),
-             |    named_struct('d', array(0L, element_at(cs, 1)),
+             |    named_struct('d', array(0L, cm[substring(word, 1, 1)]),
              |                 's', array('', substring(word, 1, 1))),
              |    (acc, x) -> if(element_at(acc.d, 2) + x.ds <= element_at(acc.d, 1) + x.db,
              |      named_struct(

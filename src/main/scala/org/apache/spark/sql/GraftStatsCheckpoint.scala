@@ -1,5 +1,8 @@
 package org.apache.spark.sql
 
+import scala.concurrent.{Await, TimeoutException}
+import scala.concurrent.duration.FiniteDuration
+
 import org.apache.spark.sql.catalyst.plans.logical.Statistics
 import org.apache.spark.sql.classic.{Dataset => CDataset, SparkSession => CSparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
@@ -104,4 +107,12 @@ object GraftStatsCheckpoint {
       case _ => ck // non-LogicalRDD leaf: nothing carried, nothing to cap
     }
   }
+
+  /** The metrics row of `obs`, or None when its action has not fired it
+    * within `timeout`. A bounded wait on the observation's own future
+    * (`private[sql]`, hence here): the caller's thread blocks, no thread
+    * is started, and nothing stays parked when the metric never fires. */
+  def observedRow(obs: Observation, timeout: FiniteDuration): Option[Row] =
+    try Some(Await.result(obs.future, timeout))
+    catch { case _: TimeoutException => None }
 }

@@ -72,6 +72,14 @@ class GraphsSpec extends SparkSpec {
     assert(bs === referenceCC(edges))
   }
 
+  test("big-star round plans at most three shuffles and no broadcast") {
+    val cur = Ckpt.capped(Seq((2L, 1L), (3L, 2L), (4L, 3L), (5L, 1L), (7L, 6L))
+      .toDF("u", "v"))
+    val (shuffles, broadcasts) = executedExchanges(Graphs.starRound(cur))
+    assert(shuffles <= 3 && broadcasts == 0,
+      s"big-star round: $shuffles shuffle + $broadcasts broadcast exchanges")
+  }
+
   test("bipartite premium components agree with union-find over the same edges") {
     import org.apache.spark.sql.functions.col
     val edges = graft.Tables.t(spark, sf, "lineitem")

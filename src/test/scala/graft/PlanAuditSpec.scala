@@ -19,6 +19,7 @@ class PlanAuditSpec extends SparkSpec {
     "sim_ivf_topk" -> "codebook assignment crossJoin against 8 broadcast centroid rows",
     "text_bm25_topk" -> "crossJoin against two single-row broadcast stats frames",
     "text_kneser_ney" -> "crossJoin against the single-row broadcast bigram-type total T",
+    "text_unigram_fertility" -> "Viterbi DP crossJoin against the single-row broadcast cost-map frame (the learned pieces as one map value)",
     "sim_rp_topk" -> "shortlist crossJoin against 5 broadcast reduced-dim query rows",
     "spatial_nearest" -> "argmin expand against a broadcast 20-row centroid dim",
     "text_surprisal" -> "crossJoin against the single-row broadcast corpus-total frame",
@@ -165,7 +166,7 @@ class PlanAuditSpec extends SparkSpec {
     "meta_summary_dtol" -> 5, // dwh experiments agg + status fold + note-tax study agg/rollup + distinct-organism fold
     "dedup_suffix_window" -> 2, // post-checkpoint: pair self-join + island/run rollups (window build behind Ckpt.capped)
     "text_unigram_lm_learn" -> 0, // final top-30 window off the per-round checkpointed vocab-sized cost table
-    "text_unigram_fertility" -> 3, // vocab DP cs/cb rollups + final per-source agg (corpus rides ONE broadcast join)
+    "text_unigram_fertility" -> 2, // cost-map gather for the vocab DP + final per-source agg (corpus rides ONE broadcast join)
     "events_did" -> 2, // global span fold + ONE event_type hash aggregate
     "occ_sdm_background" -> 2, // species-dim agg + rank window (presence set behind Ckpt.capped; effort broadcast)
     "events_fdr_bh" -> 1, // final max-k fold off the checkpointed ≤m-row ranked table (MK pair join behind Ckpt.capped)

@@ -1,10 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (sbt runs tests in one forked JVM). */
-trait SparkSpec extends AnyFunSuite {
+trait SparkSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   lazy val spark: SparkSession = SparkSpec.session
   val sf = "/root/testdata/sf0.001"
 
@@ -18,6 +20,16 @@ trait SparkSpec extends AnyFunSuite {
       case (k, Some(v)) => conf.set(k, v)
       case (k, None)    => conf.unset(k)
     }
+  }
+
+  /** Executes `df` and counts the (shuffle, broadcast) exchanges of its
+    * final adaptive plan, query stages included; a reused exchange is not
+    * counted again. */
+  def executedExchanges(df: DataFrame): (Int, Int) = {
+    df.collect()
+    val plan = df.queryExecution.executedPlan
+    (collect(plan) { case e: ShuffleExchangeLike => e }.size,
+      collect(plan) { case e: BroadcastExchangeLike => e }.size)
   }
 }
 

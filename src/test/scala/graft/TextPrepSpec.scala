@@ -918,6 +918,16 @@ class TextPrepSpec extends SparkSpec {
     assert(gotCorpus === referenceUnigram(corpusWords, 2))
   }
 
+  test("unigram-LM EM round plans at most five exchanges") {
+    // the cost map's gather + broadcast, the piece recount, the total's
+    // gather + broadcast
+    val words = Seq(("abab", 3L), ("ab", 2L), ("b", 5L), ("cc", 4L), ("abc", 1L))
+    val (cost, dict) = TextPrep.unigramCosts(words.toDF("word", "freq"), rounds = 0)
+    val (shuffles, broadcasts) = executedExchanges(TextPrep.emRound(dict, cost))
+    assert(shuffles + broadcasts <= 5,
+      s"EM round: $shuffles shuffle + $broadcasts broadcast exchanges")
+  }
+
   /** Hand-rolled interpolated Kneser–Ney on the operator's exact 2^20
     * integer lattice (discount 3/4, λ floored first, then ·n1pw div T) —
     * driver Scala over plain Maps, no DataFrames. */
