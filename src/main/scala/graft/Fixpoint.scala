@@ -14,18 +14,18 @@ import org.apache.spark.sql.functions.typedLit
   * that join the previous checkpoint several times per round compound
   * its size estimate geometrically.
   *
-  * FUSION. At bench scale each checkpoint costs ~0.1-0.2 s of driver
-  * latency (plan, codegen, AQE stage jobs) while a round's executor work
-  * on the small graphs is milliseconds, so several synchronous rounds
-  * are composed into ONE plan per checkpoint. The composed algebra is
-  * unchanged; only the materialization boundary moves. The depth `fuse`
-  * follows how often a round references the previous state:
-  *  - a body that references it ONCE fuses 3: fused plans stay linear,
-  *    and the only cost of depth is identity rounds at the fixpoint;
-  *  - a body that references it two or more times fuses 2: f fused
-  *    rounds hold 2^f (or 3^f) copies of the checkpoint leaf, so f ≥ 3
-  *    pays more planning than it saves (probed);
-  *  - a loop that reads a convergence value every round fuses 1.
+  * ONE ROUND PER CHECKPOINT. Every round ends in its own checkpoint.
+  * Composing several rounds into one plan per checkpoint saves checkpoint
+  * jobs but costs compiles: Spark names each whole-stage class
+  * `GeneratedIteratorForCodegenStage<N>`, N numbered per query in the
+  * order it creates stages, and its codegen cache is keyed on the full
+  * source, so the same round at another position of a composed body is
+  * a new class. On the 19-op board at sf0.001 (4 cores) 32 of the 685
+  * classes a pass compiled were such repeats, and every compiled class
+  * stays cached at ~30 KB of retained heap. A round over the previous
+  * round's checkpoint plans the same stages every time and compiles once
+  * per JVM. A composed body of f rounds that each reference the state
+  * twice also held 2^f copies of the leaf.
   *
   * GREEDY. A loop whose state is a function of the picks so far needs no
   * state checkpoint at all ([[greedy]]): the caller materializes one
@@ -39,46 +39,46 @@ import org.apache.spark.sql.functions.typedLit
   * strings), which generated code reads by reference; a primitive literal
   * (an `isin` list, a replace per pick, a `size(picks)` the optimizer
   * folds) is inlined into the source and makes every round's class new.
+  * The leaf is part of the code too. A round's output must have its
+  * input's schema, nullability included, or round 0 (which reads `init`)
+  * and the rounds after it (which read a round's output) compile
+  * different classes, e.g. when an aggregate's nullable `min` replaces a
+  * non-null column of `init`. And every state carries `init`'s size
+  * estimate ([[carry]]), because join strategies follow the estimate.
   */
 object Fixpoint {
 
   /** The states S_0 = `init` .. S_rounds of `rounds` applications of
-    * `step`, checkpointed every `fuse` rounds and at the last one. The
-    * states inside a fused body are lazy plans over the checkpoint that
-    * starts it. */
-  def states(init: DataFrame, rounds: Int, fuse: Int)(
-      step: DataFrame => DataFrame): IndexedSeq[DataFrame] = {
-    val out = scala.collection.mutable.ArrayBuffer(init)
-    while (out.size <= rounds) {
-      val f = math.min(fuse, rounds + 1 - out.size)
-      for (_ <- 1 until f) out += step(out.last)
-      out += Ckpt.capped(step(out.last))
-    }
-    out.toIndexedSeq
-  }
+    * `step`; each after `init` is a checkpoint carrying `init`'s
+    * estimate. */
+  def states(init: DataFrame, rounds: Int)(
+      step: DataFrame => DataFrame): IndexedSeq[DataFrame] =
+    Iterator.iterate(init)(s => carry(s, Ckpt.capped(step(s))))
+      .take(rounds + 1).toIndexedSeq
 
   /** The last of [[states]]. */
-  def fixed(init: DataFrame, rounds: Int, fuse: Int)(
-      step: DataFrame => DataFrame): DataFrame =
-    states(init, rounds, fuse)(step).last
+  def fixed(init: DataFrame, rounds: Int)(step: DataFrame => DataFrame): DataFrame =
+    states(init, rounds)(step).last
 
-  /** Runs `body(firstRound, f)` over bodies of `f` ≤ `fuse` rounds until it
-    * reports done; returns the rounds used. Running out of `maxRounds`
-    * means the result is not a fixpoint, so it throws rather than hand
-    * back partial state. `raise` names what the caller should raise. */
-  def converge(op: String, maxRounds: Int, fuse: Int, raise: String)(
-      body: (Int, Int) => Boolean): Int = {
-    var used = 0
-    var done = false
-    while (!done && used < maxRounds) {
-      val f = math.min(fuse, maxRounds - used)
-      done = body(used, f)
-      used += f
-    }
-    if (!done) throw new IllegalStateException(
-      s"$op did not converge in $maxRounds rounds; raise $raise")
-    used
-  }
+  /** Runs `round(r)` for r = 0, 1, .. until it reports done; returns the
+    * rounds used. Running out of `maxRounds` means the result is not a
+    * fixpoint, so it throws rather than hand back partial state. `raise`
+    * names what the caller should raise. */
+  def converge(op: String, maxRounds: Int, raise: String)(round: Int => Boolean): Int =
+    (0 until maxRounds).find(round).map(_ + 1).getOrElse(throw new IllegalStateException(
+      s"$op did not converge in $maxRounds rounds; raise $raise"))
+
+  /** `next`, the checkpoint of a round that read the loop state `state`,
+    * as the loop's next state: it carries `state`'s size estimate instead
+    * of the one Catalyst derived for the round. A round that joins its
+    * state multiplies that estimate into its output's, so without the
+    * carry the estimate compounds round over round until it reaches the
+    * cap, and join strategies and build sides change on the way: rounds
+    * that compute the same thing plan, and compile, different code. With
+    * it every round plans over a leaf of the same estimate. States are
+    * bare checkpoints, so `state`'s plan estimate is its leaf's. */
+  def carry(state: DataFrame, next: DataFrame): DataFrame =
+    org.apache.spark.sql.GraftStatsCheckpoint.withStatsOf(next, state)
 
   /** Greedy selection of `k` picks. Round r (0-based) gets the keys of
     * the r picks so far as ONE array literal (`typedLit`, so the round's

@@ -17,7 +17,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * ser/de boundaries).
   *
   * Merge resolution per word: repeatedly find the LOWEST-rank adjacent
-  * token pair present in the table and fuse it; stop when no adjacent
+  * token pair present in the table and merge it; stop when no adjacent
   * pair is mergeable. Words are maximal runs of non-space bytes — merges
   * never cross a space, matching the pre-tokenization real BPE vocabs
   * assume.
@@ -90,7 +90,7 @@ object BpeEncode {
         var n = ids.length
         var i = 0
         while (i < n) { ids(i) = bytes(wordStart + i) & 0xff; i += 1 }
-        // greedy: always fuse the lowest-rank (smallest-id) mergeable pair
+        // greedy: always merge the lowest-rank (smallest-id) mergeable pair
         var done = false
         while (!done && n > 1) {
           var best = -1

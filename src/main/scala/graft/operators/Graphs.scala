@@ -14,13 +14,15 @@ import org.apache.spark.sql.functions._
   * {a,b,c}).
   *
   * Every loop that checkpoints per round runs through [[graft.Fixpoint]],
-  * which owns fusion depth, the checkpoint, the observed convergence read
-  * and the loud failure at the round cap. Fixed-round loops (k-core,
-  * truss, onion, BFS, landmark BFS, ancestor closure) are deterministic
-  * on both engines; all but ancestor closure have oracles that unroll
-  * the same rounds as chained CTEs. Convergence loops (both CC
-  * algorithms, Borůvka) read one aggregate observed on each checkpoint
-  * action, so no row data reaches the driver.
+  * which owns the per-round checkpoint, the carried size estimate, the
+  * observed convergence read and the loud failure at the round cap. Every
+  * operator first materializes its input edges at the same consumer-free
+  * boundary ([[edgeCut]]), so operators over one upstream share its plan.
+  * Fixed-round loops (k-core, truss, onion, BFS, landmark BFS, ancestor
+  * closure) are deterministic on both engines; all but ancestor closure
+  * have oracles that unroll the same rounds as chained CTEs. Convergence
+  * loops (both CC algorithms, Borůvka) read one aggregate observed on
+  * each checkpoint action, so no row data reaches the driver.
   */
 object Graphs {
   type Q = (SparkSession, String) => DataFrame
@@ -29,24 +31,29 @@ object Graphs {
     * [[graft.Ckpt]] for why plain localCheckpoint is unsafe in loops. */
   private def ckpt(df: DataFrame): DataFrame = graft.Ckpt.capped(df)
 
+  /** The first materialization of every operator's input edge list: the
+    * edges checkpointed as (x, y), renamed only. Nothing that depends on
+    * the consumer (a filter, a projection, a `distinct`) runs before the
+    * checkpoint, so every operator over the same upstream pair plan (the
+    * trigram-Jaccard pairs, the k-NN graph) runs the identical plan here,
+    * and only the first of them compiles its stages. */
+  private[graft] def edgeCut(edges: DataFrame): DataFrame = ckpt(edges.toDF("x", "y"))
+
   /** Canonical undirected edges (u < v): direction, duplicates and
     * self-loops dropped, checkpointed because every caller references
     * the list more than once. */
   private def canonical(edges: DataFrame): DataFrame =
-    edges.toDF("x", "y")
+    edgeCut(edges)
       .select(least(col("x"), col("y")).as("u"),
         greatest(col("x"), col("y")).as("v"))
       .filter(col("u") =!= col("v")).distinct()
       .transform(ckpt)
 
-  /** Distinct arcs (a, b) in both directions, self-loops dropped.
-    * `cutRaw` checkpoints the raw edges first, so the union's two legs do
-    * not each replay an expensive upstream pair plan; labelPropagation
-    * and bfsLayers measured that cut as a loss (0.85x, 0.86x: their legs
-    * share the pair plan's exchanges through ReusedExchange). */
-  private def symmetrize(edges: DataFrame, cutRaw: Boolean): DataFrame = {
-    val raw = edges.toDF("x", "y").filter(col("x") =!= col("y"))
-    val e = if (cutRaw) ckpt(raw) else raw
+  /** Distinct arcs (a, b) in both directions, self-loops dropped, over
+    * the [[edgeCut]]: the union's two legs read the checkpoint, not the
+    * upstream pair plan. */
+  private def symmetrize(edges: DataFrame): DataFrame = {
+    val e = edgeCut(edges).filter(col("x") =!= col("y"))
     e.select(col("x").as("a"), col("y").as("b"))
       .union(e.select(col("y").as("a"), col("x").as("b")))
       .distinct()
@@ -77,21 +84,21 @@ object Graphs {
   }
 
   private def connectedComponentsMinLabel(edges: DataFrame, maxIter: Int): DataFrame = {
-    // The edge list is checkpointed ONCE up front (r15): the symmetrizing
-    // union scans it twice, and every round scans it again — without the
-    // cut each reference replays the possibly-expensive upstream pair
-    // generation (the phash pair plan is multi-second).
-    val e = ckpt(edges.toDF("a", "b"))
+    // The symmetrizing union reads the edge cut twice, and every round
+    // reads it again, never the upstream pair plan.
+    val e = edgeCut(edges).toDF("a", "b")
     // no distinct(): duplicate edges cannot move a min aggregate, and the
     // dedup shuffle would cost more than the duplicates it removes
     val sym = e.union(e.select(col("b"), col("a")))
-    var labels = sym.select(col("a").as("node")).distinct()
-      .withColumn("label", col("node"))
+    // label = min(node) of the node's own group: the same value as the
+    // node, but nullable like the rounds' min, so round 0 reads the schema
+    // every later round reads and compiles the same classes
+    var labels = sym.groupBy(col("a").as("node")).agg(min(col("a")).as("label"))
       .transform(ckpt)
     // CLOSED-neighborhood edge set: self-loops come from the node
     // checkpoint, so one round is ONE join + ONE min aggregate and
-    // references the previous labels exactly ONCE (fuse 3). min over the
-    // closed neighborhood ≡ the textbook least(own, min-over-neighbors).
+    // references the previous labels exactly ONCE. min over the closed
+    // neighborhood ≡ the textbook least(own, min-over-neighbors).
     val symC = sym.union(labels.select(col("node").as("a"),
       col("node").as("b")))
     def round(cur: DataFrame): DataFrame =
@@ -99,21 +106,20 @@ object Graphs {
         .groupBy(symC("a").as("node")).agg(min("label").as("label"))
     // Labels only ever DECREASE, so the label SUM strictly decreases
     // while anything moves and is constant exactly at the fixpoint: one
-    // observed DECIMAL(38,0) sum per fused body replaces an old-vs-new
+    // observed DECIMAL(38,0) sum per round replaces an old-vs-new
     // comparison (which would reference the previous labels twice). An
     // empty edge set sums to 0, not null.
     var prevSum: Option[String] = None
-    graft.Fixpoint.converge("connectedComponents", maxIter, fuse = 3,
-        raise = "maxIter (the graph diameter exceeds it)") { (iter, f) =>
-      val (next, m) = graft.Fixpoint.observe(
-        Iterator.iterate(labels)(round).drop(f).next(), s"cc_round_$iter",
+    graft.Fixpoint.converge("connectedComponents", maxIter,
+        raise = "maxIter (the graph diameter exceeds it)") { iter =>
+      val (next, m) = graft.Fixpoint.observe(round(labels), s"cc_round_$iter",
         coalesce(sum(col("label").cast("decimal(38,0)")),
           lit(0).cast("decimal(38,0)")).as("ls"))
       val s = m("ls").asInstanceOf[java.math.BigDecimal]
         .stripTrailingZeros.toPlainString
       val done = prevSum.contains(s)
       prevSum = Some(s)
-      labels = next
+      labels = graft.Fixpoint.carry(labels, next)
       done
     }
     labels.select(col("node"), col("label").as("cluster_id"))
@@ -152,7 +158,11 @@ object Graphs {
     val nodes = e0.select(col("u").as("node"))
       .union(e0.select(col("v").as("node"))).distinct()
       .transform(ckpt) // reused after the loop; don't replay the scan
-    var cur = e0.transform(ckpt)
+    // round 0 reads the edges with a round output's schema: the star
+    // minima are window mins, so a round's (u, v) are both nullable, and
+    // a non-null round-0 leaf would compile classes no later round uses
+    var cur = org.apache.spark.sql.GraftStatsCheckpoint
+      .withNullableOutput(e0.transform(ckpt))
     // (count, Σ xxhash64) edge-set checksum. Hash sum in DECIMAL(38,0):
     // a BIGINT sum of ±2^63 hashes overflows under ANSI on a few
     // thousand rows.
@@ -166,14 +176,14 @@ object Graphs {
       val r = cur.agg(checksumCols.head, checksumCols.tail: _*).head()
       checksum(r.getValuesMap[Any](Seq("cnt", "hs")))
     }
-    val rounds = graft.Fixpoint.converge("alternatingCC", maxRounds, fuse = 1,
-        raise = "maxRounds") { (r, _) =>
+    val rounds = graft.Fixpoint.converge("alternatingCC", maxRounds,
+        raise = "maxRounds") { r =>
       val (small, m) = graft.Fixpoint.observe(starRound(cur), s"bigstar_$r",
         checksumCols: _*)
       val sum1 = checksum(m)
       val converged = sum1 == prev
       prev = sum1
-      cur = small
+      cur = graft.Fixpoint.carry(cur, small)
       converged
     }
     val labels = nodes
@@ -334,7 +344,7 @@ object Graphs {
     * CTEs). Per round the support join is the ordered-wedge shape of
     * [[triangleCounts]] (candidates bounded by Σd², never edge²); the
     * survivor set is referenced three times per round (join base + both
-    * symmetric sides), so rounds checkpoint in pairs.
+    * symmetric sides), and every round ends in a checkpoint.
     *
     * ORACLE COUPLING: the graph_ktruss DuckDB oracle hardcodes k = 3
     * (`HAVING COUNT(*) >= 1`) and exactly 3 unrolled peel rounds — any
@@ -351,7 +361,7 @@ object Graphs {
         .groupBy("u", "v").agg(count(lit(1)).as("sup"))
         .filter(col("sup") >= k - 2).select("u", "v")
     }
-    val alive = graft.Fixpoint.fixed(und, rounds, fuse = 2)(round)
+    val alive = graft.Fixpoint.fixed(und, rounds)(round)
     und.join(alive.withColumn("flag", lit(true)), Seq("u", "v"), "left_outer")
       .select(col("u"), col("v"),
         coalesce(col("flag"), lit(false)).as("in_truss"))
@@ -394,8 +404,8 @@ object Graphs {
       .distinct().withColumn("comp", col("node"))
       .transform(ckpt)
     val picked = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val rounds = graft.Fixpoint.converge("boruvkaMsf", maxRounds, fuse = 1,
-        raise = "maxRounds (component count halves per round)") { (round, _) =>
+    val rounds = graft.Fixpoint.converge("boruvkaMsf", maxRounds,
+        raise = "maxRounds (component count halves per round)") { round =>
       // the active-edge count is observed on the checkpoint, which comes
       // BEFORE the count check so that the check does not replay the join
       val (e, m) = graft.Fixpoint.observe(und
@@ -429,25 +439,29 @@ object Graphs {
         val p0 = sel.select(col("c"),
           when(col("cu") === col("c"), col("cv")).otherwise(col("cu"))
             .as("p"))
+        // (c, p, mv): mv = whether the last jump moved p; the pointer
+        // checkpoint keeps it so that every jump reads one leaf schema
         var ptr = p0.join(p0.toDF("p", "pp"), Seq("p"))
           .select(col("c"),
             when(col("pp") === col("c"), least(col("c"), col("p")))
-              .otherwise(col("p")).as("p"))
+              .otherwise(col("p")).as("p"),
+            lit(null).cast("long").as("mv"))
           .transform(ckpt)
         // pointer jumping: p ← p(p) until fixpoint (≤ log depth rounds)
-        graft.Fixpoint.converge("boruvkaMsf pointer jumping", maxRounds, fuse = 1,
-            raise = "maxRounds") { (jump, _) =>
-          val (nxt, mv) = graft.Fixpoint.observe(ptr.toDF("c0", "p0")
-            .join(ptr.toDF("p0", "p1"), Seq("p0"))
+        graft.Fixpoint.converge("boruvkaMsf pointer jumping", maxRounds,
+            raise = "maxRounds") { jump =>
+          val (nxt, mv) = graft.Fixpoint.observe(ptr.toDF("c0", "p0", "m0")
+            .join(ptr.toDF("p0", "p1", "m1"), Seq("p0"))
             .select(col("c0").as("c"), col("p1").as("p"),
               (col("p1") =!= col("p0")).cast("long").as("mv")),
             s"boruvka_jump_${round}_$jump", coalesce(sum("mv"), lit(0L)).as("mv"))
-          ptr = nxt.select("c", "p")
+          ptr = graft.Fixpoint.carry(ptr, nxt)
           mv("mv") == 0L
         }
-        comp = comp.join(ptr.toDF("comp", "root"), Seq("comp"), "left_outer")
-          .select(col("node"), coalesce(col("root"), col("comp")).as("comp"))
-          .transform(ckpt)
+        comp = graft.Fixpoint.carry(comp,
+          comp.join(ptr.toDF("comp", "root", "mv"), Seq("comp"), "left_outer")
+            .select(col("node"), coalesce(col("root"), col("comp")).as("comp"))
+            .transform(ckpt))
         false
       }
     }
@@ -750,12 +764,11 @@ object Graphs {
     * small pair graph). A deterministic round count is also what keeps
     * the oracle an unrolled CTE chain. */
   def pageRank(edges: DataFrame, iters: Int = 5): DataFrame = {
-    // raw edges cut first (r15): the union references them twice and
-    // sym is referenced twice more (degree fold + join), so an uncut plan
-    // replays the upstream pair generation up to 4× inside outE.
+    // the union reads the edge cut twice and sym is referenced twice more
+    // (degree fold + join), all off the cut, never the upstream pair plan.
     // Duplicates DO change sums here (unlike the min-label CC), so the
     // symmetrized edge set is distinct.
-    val sym = symmetrize(edges, cutRaw = true)
+    val sym = symmetrize(edges)
     val deg = sym.groupBy("a").agg(count(lit(1)).as("deg"))
     val outE = sym.join(deg, Seq("a")).transform(ckpt) // (a, b, deg(a))
     val n = outE.select("a").distinct().count() // off the checkpoint
@@ -795,7 +808,7 @@ object Graphs {
     * (edge ⋈ label) join + two partial-aggregated shuffles; bounded
     * lineage (fixed rounds) ⇒ no per-round checkpoint. */
   def labelPropagation(edges: DataFrame, iters: Int = 4): DataFrame = {
-    val sym = symmetrize(edges, cutRaw = false).transform(ckpt)
+    val sym = symmetrize(edges).transform(ckpt)
     var labels = sym.select(col("a").as("node")).distinct()
       .withColumn("label", col("node"))
     for (_ <- 1 to iters) {
@@ -861,18 +874,18 @@ object Graphs {
     * checkpointed node set and the survivor sets after each of `rounds`
     * rounds (element 0 = every node). Edges are symmetrized and
     * checkpointed once; each round is two semi-joins + one partial-agg
-    * degree shuffle, and references the survivor set twice (both
-    * endpoint filters), so rounds checkpoint in pairs. */
+    * degree shuffle, references the survivor set twice (both endpoint
+    * filters), and ends in a checkpoint. */
   private def peelStates(edges: DataFrame, k: Int, rounds: Int)
       : (DataFrame, IndexedSeq[DataFrame]) = {
-    val sym = symmetrize(edges, cutRaw = true).transform(ckpt)
+    val sym = symmetrize(edges).transform(ckpt)
     val nodes = sym.select(col("a").as("node")).distinct().transform(ckpt)
     def round(al: DataFrame): DataFrame = sym
       .join(al.select(col("node").as("a")), Seq("a"), "left_semi")
       .join(al.select(col("node").as("b")), Seq("b"), "left_semi")
       .groupBy(col("a").as("node")).agg(count(lit(1)).as("deg"))
       .filter(col("deg") >= k).select("node")
-    (nodes, graft.Fixpoint.states(nodes, rounds, fuse = 2)(round))
+    (nodes, graft.Fixpoint.states(nodes, rounds)(round))
   }
 
   /** Onion layers over the trigram-Jaccard pair graph — kcore's readout
@@ -909,7 +922,7 @@ object Graphs {
           (col("x.dist") + col("y.dist")).as("dist"))
     val f = graft.Fixpoint.fixed(p.withColumn("dist",
       when(col("node") === col("anc"), 0L).otherwise(1L)).transform(ckpt),
-      rounds, fuse = 2)(compose)
+      rounds)(compose)
     // converged ⟺ every anc is a root (self-parented); else fail loudly
     val roots = p.filter(col("node") === col("anc")).select(col("node").as("anc"))
     if (!f.join(broadcast(roots), Seq("anc"), "left_anti").isEmpty)
@@ -941,7 +954,7 @@ object Graphs {
     * subtree). */
   def bfsLayers(edges: DataFrame, seed: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
                 rounds: Int = 4): DataFrame = {
-    val sym = symmetrize(edges, cutRaw = false).transform(ckpt)
+    val sym = symmetrize(edges).transform(ckpt)
     val dist0 = sym.select(col("a").as("node")).distinct()
       .withColumn("d", when(seed(col("node")), 0L)
         .otherwise(lit(null).cast("long")))
@@ -956,7 +969,7 @@ object Graphs {
             .when(col("nd").isNull, col("d"))
             .otherwise(least(col("d"), col("nd"))).as("d"))
     }
-    graft.Fixpoint.fixed(dist0, rounds, fuse = 2)(round)
+    graft.Fixpoint.fixed(dist0, rounds)(round)
       .select(col("node"), coalesce(col("d"), lit(-1L)).as("dist4"))
   }
 
@@ -1000,13 +1013,13 @@ object Graphs {
   /** The shared landmark-BFS core: md5-'lm:'-picked landmarks, `rounds`
     * synchronous relaxations over ONE dense (node, d0..dL-1) table —
     * consumed by [[landmarkHarmonic]] and [[graphDiameterEstimate]].
-    * The dist relation is referenced twice per round, so rounds
-    * checkpoint in pairs. Returns the final checkpointed dist table plus
+    * The dist relation is referenced twice per round, and every round
+    * ends in a checkpoint. Returns the final checkpointed dist table plus
     * the landmark ids in pick order (the lm_idx the estimators report). */
   private[operators] def landmarkDistances(
       edges: DataFrame, nLandmarks: Int, rounds: Int)
       : (DataFrame, Array[Long]) = {
-    val sym = symmetrize(edges, cutRaw = true).transform(ckpt)
+    val sym = symmetrize(edges).transform(ckpt)
     val nodes = sym.select(col("a").as("node")).distinct()
     val lms: Array[Long] = nodes
       .withColumn("h", expr("cast(conv(substring(md5(cast(concat('lm:'," +
@@ -1029,7 +1042,7 @@ object Graphs {
     // no nodes ⇒ no landmarks and no d-columns to relax: dist0 is the
     // (empty) answer
     val relax = if (lms.isEmpty) 0 else rounds
-    (graft.Fixpoint.fixed(dist0, relax, fuse = 2)(round), lms)
+    (graft.Fixpoint.fixed(dist0, relax)(round), lms)
   }
 
   /** Harmonic centrality of the k-NN similarity graph from 4 hash

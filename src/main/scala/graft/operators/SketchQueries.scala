@@ -446,11 +446,10 @@ object SketchQueries {
         .join(qdots, Seq("qid", "nid"))
       v.unionByName(expanded).dropDuplicates("qid", "nid")
     }
-    // one round per checkpoint: deeper fusion of the beam is unmeasured
     val visited = graft.Fixpoint.fixed(qdots.select("qid").distinct()
       .crossJoin(broadcast(entries))
       .join(qdots, Seq("qid", "nid"))
-      .transform(graft.Ckpt.capped), rounds = 4, fuse = 1)(expand)
+      .transform(graft.Ckpt.capped), rounds = 4)(expand)
     val found = visited.withColumn("r", row_number().over(wq))
       .filter(col("r") <= 10).select("qid", "nid")
     val exact = qdots.withColumn("r", row_number().over(wq))
@@ -1106,7 +1105,7 @@ object SketchQueries {
     * oracle long-forms the signature as (doc_id, seed_i, min) rows and
     * rebuilds band keys with the same '_'-concatenation, so candidate
     * generation (not just the final estimate) is cross-checked. */
-  /** Greedy-BPE fuse step as SQL: the candidate list maps each adjacent
+  /** Greedy-BPE merge step as SQL: the candidate list maps each adjacent
     * token pair to its merged id via the packed literal merge table
     * (generated from BpeEncode.Merges — cannot drift); `list_position`
     * needs the `> 0` guard because DuckDB 1.0 returns 0, not NULL, for

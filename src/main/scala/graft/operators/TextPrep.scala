@@ -1670,7 +1670,7 @@ object TextPrep {
     * checkpointed word dict) so the ENCODE path
     * ([[textUnigramFertility]]) can segment with the learned pieces.
     * Every round is one checkpoint of the vocab-sized cost table
-    * ([[graft.Fixpoint.fixed]], fuse 1) and plans five exchanges: the
+    * ([[graft.Fixpoint.fixed]]) and plans five exchanges: the
     * cost map's gather and broadcast, the piece recount, and the total's
     * gather and broadcast (see [[emRound]]). */
   private[graft] def unigramCosts(words0: DataFrame, rounds: Int)
@@ -1687,7 +1687,7 @@ object TextPrep {
     val seed = chars.groupBy("piece").agg((sum("freq") + 1L).as("c"))
       .unionByName(bigrams0)
     val cost = graft.Fixpoint.fixed(withCosts(seed).transform(graft.Ckpt.capped),
-      rounds, fuse = 1)(emRound(words, _))
+      rounds)(emRound(words, _))
     (cost, words)
   }
 

@@ -1657,7 +1657,7 @@ object TextQueries {
     * hybrid-search primitive every RAG stack runs: rank the corpus per
     * query by exact dot product (sim_cosine_topk's leg) and by distinct-
     * token overlap with the query document (the inverted-index leg whose
-    * candidate set is bounded by the query's own terms), then fuse with
+    * candidate set is bounded by the query's own terms), then combine both with
     * the classic k=60 RRF on an exact integer lattice —
     * 1000000 div (60 + rank) per present leg, absent leg contributes 0.
     * Rank ties cannot happen (row_number over a total order); fusion

@@ -3,6 +3,7 @@ package org.apache.spark.sql
 import scala.concurrent.{Await, TimeoutException}
 import scala.concurrent.duration.FiniteDuration
 
+import org.apache.spark.sql.catalyst.expressions.{Attribute, ExpressionSet, IsNotNull}
 import org.apache.spark.sql.catalyst.plans.logical.Statistics
 import org.apache.spark.sql.classic.{Dataset => CDataset, SparkSession => CSparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
@@ -90,23 +91,51 @@ object GraftStatsCheckpoint {
 
   def localCheckpointCapped(df: DataFrame): DataFrame = {
     val ck = df.localCheckpoint() // eager: materialize exactly once
+    val st = ck.queryExecution.analyzed.stats
+    if (st.sizeInBytes <= Cap && st.rowCount.forall(_ <= Cap)) ck else withStats(ck, st)
+  }
+
+  /** The checkpoint `ck` re-wrapped with the statistics of `like`'s plan
+    * (capped as [[localCheckpointCapped]]), everything else of its leaf
+    * kept. */
+  def withStatsOf(ck: DataFrame, like: DataFrame): DataFrame =
+    withStats(ck, like.queryExecution.optimizedPlan.stats)
+
+  private def withStats(ck: DataFrame, st: Statistics): DataFrame = releaf(ck) { lr =>
+    (lr.output, Statistics(sizeInBytes = st.sizeInBytes.min(Cap),
+      rowCount = st.rowCount.map(_.min(Cap))), lr.constraints)
+  }
+
+  /** The checkpoint `ck` re-wrapped with every column nullable in its
+    * schema, and each column that was not nullable constrained
+    * `isnotnull` instead: the shape of a leaf whose nullable columns a
+    * filter has proved non-null. Both are sound: the schema claims less,
+    * and the constraints hold. */
+  def withNullableOutput(ck: DataFrame): DataFrame = releaf(ck) { lr =>
+    // constraints name the new attributes: a self-join or self-union
+    // re-instances the leaf by rewriting exactly its output attributes
+    val out = lr.output.map(a => a.exprId -> a.withNullability(true)).toMap
+    (lr.output.map(a => out(a.exprId)), lr.computeStats(),
+      ExpressionSet(lr.constraints.toSeq.map(_.transform {
+        case a: Attribute => out.getOrElse(a.exprId, a)
+      })) ++ lr.output.filterNot(_.nullable).map(a => IsNotNull(out(a.exprId))))
+  }
+
+  /** `ck`'s checkpoint leaf rebuilt with the output, statistics and
+    * constraints `f` gives; no job runs. A frame that is not a checkpoint
+    * is returned as it is. */
+  private def releaf(ck: DataFrame)(
+      f: LogicalRDD => (Seq[Attribute], Statistics, ExpressionSet)): DataFrame =
     ck.queryExecution.analyzed match {
       case lr: LogicalRDD =>
-        val st = lr.computeStats()
-        if (st.sizeInBytes <= Cap && st.rowCount.forall(_ <= Cap)) ck
-        else {
-          val capped = Statistics(
-            sizeInBytes = st.sizeInBytes.min(Cap),
-            rowCount = st.rowCount.map(_.min(Cap)))
-          val spark = ck.sparkSession.asInstanceOf[CSparkSession]
-          CDataset.ofRows(spark,
-            new LogicalRDD(lr.output, lr.rdd, lr.outputPartitioning,
-              lr.outputOrdering, lr.isStreaming, lr.stream)(
-              spark, Some(capped), Some(lr.constraints)))
-        }
-      case _ => ck // non-LogicalRDD leaf: nothing carried, nothing to cap
+        val (output, stats, constraints) = f(lr)
+        val spark = ck.sparkSession.asInstanceOf[CSparkSession]
+        CDataset.ofRows(spark,
+          new LogicalRDD(output, lr.rdd, lr.outputPartitioning,
+            lr.outputOrdering, lr.isStreaming, lr.stream)(
+            spark, Some(stats), Some(constraints)))
+      case _ => ck
     }
-  }
 
   /** The metrics row of `obs`, or None when its action has not fired it
     * within `timeout`. A bounded wait on the observation's own future

@@ -21,19 +21,19 @@ class FixpointSpec extends SparkSpec {
     assert(ck.as[Long].collect().sorted.toSeq === Seq(1L, 2L, 3L))
   }
 
-  test("round drivers: fused bodies checkpoint at their ends; the cap fails loudly") {
-    val states = Fixpoint.states(Seq(0L).toDF("x"), rounds = 5, fuse = 2)(
+  test("round drivers: every state after init is a checkpoint; the cap fails loudly") {
+    val states = Fixpoint.states(Seq(0L).toDF("x"), rounds = 5)(
       _.select((col("x") + 1).as("x")))
     assert(states.map(_.as[Long].head()) === (0L to 5L))
     assert(states.indices.filter(i =>
-      states(i).queryExecution.logical.isInstanceOf[LogicalRDD]) === Seq(2, 4, 5))
-    val bodies = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
-    assert(Fixpoint.converge("probe", 7, fuse = 3, raise = "maxProbe") { (r, f) =>
-      bodies += ((r, f)); r + f >= 6
+      states(i).queryExecution.logical.isInstanceOf[LogicalRDD]) === (1 to 5))
+    val rounds = scala.collection.mutable.ArrayBuffer.empty[Int]
+    assert(Fixpoint.converge("probe", 7, raise = "maxProbe") { r =>
+      rounds += r; r == 5
     } === 6)
-    assert(bodies.toSeq === Seq((0, 3), (3, 3)))
+    assert(rounds.toSeq === (0 to 5))
     val e = intercept[IllegalStateException] {
-      Fixpoint.converge("probe", 7, fuse = 3, raise = "maxProbe")((_, _) => false)
+      Fixpoint.converge("probe", 7, raise = "maxProbe")(_ => false)
     }
     assert(e.getMessage === "probe did not converge in 7 rounds; raise maxProbe")
   }

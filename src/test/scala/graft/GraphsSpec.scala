@@ -585,4 +585,81 @@ class GraphsSpec extends SparkSpec {
     }
   }
 
+  private def compiles: Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  test("round loops compile nothing new when run again with more rounds or a longer path") {
+    def path(n: Long) = (0L until n).map(i => (i, i + 1)).toDF("a", "b")
+    def weighted(n: Long) =
+      (0L until n).map(i => (i, i + 1, (i * 7919L) % 1009L * 1024L + i)).toDF("u", "v", "w")
+    // a triangle with an n-node tail: the tail peels one node per round,
+    // the triangle stays
+    def tailed(n: Long) = (Seq((0L, 1L), (1L, 2L), (0L, 2L)) ++
+      (2L until 2L + n).map(i => (i, i + 1))).toDF("a", "b")
+    // K4 with a pendant path: the pendant edges peel, the clique stays
+    val k4 = (for (a <- 1L to 4L; b <- (a + 1) to 4L) yield (a, b)) ++
+      Seq((4L, 5L), (5L, 6L))
+    def tree(n: Long) = (1L to n).map(v => (v, math.max(v / 2, 1L))).toDF("node", "anc")
+    // (operator, a run, a run with more rounds): every round runs while
+    // the operator builds its plan
+    val ops: Seq[(String, () => Any, () => Any)] = Seq(
+      ("min-label CC", () => Graphs.connectedComponents(path(6)),
+        () => Graphs.connectedComponents(path(14))),
+      ("big-star CC", () => Graphs.alternatingCC(path(8)),
+        () => Graphs.alternatingCC(path(200))),
+      ("k-core/onion peel", () => Graphs.kcorePeel(tailed(8), rounds = 3),
+        () => Graphs.kcorePeel(tailed(8), rounds = 6)),
+      ("truss", () => Graphs.trussPeel(k4.toDF("a", "b"), rounds = 2),
+        () => Graphs.trussPeel(k4.toDF("a", "b"), rounds = 4)),
+      ("BFS", () => Graphs.bfsLayers(path(10), n => n === 0L, rounds = 2),
+        () => Graphs.bfsLayers(path(10), n => n === 0L, rounds = 5)),
+      ("landmark BFS", () => Graphs.landmarkHarmonic(path(10), rounds = 2),
+        () => Graphs.landmarkHarmonic(path(10), rounds = 5)),
+      ("ancestor closure", () => Graphs.ancestorClosure(tree(64), rounds = 3),
+        () => Graphs.ancestorClosure(tree(64), rounds = 6)),
+      ("Boruvka", () => Graphs.boruvkaMsfRounds(weighted(8), 32),
+        () => Graphs.boruvkaMsfRounds(weighted(200), 32)))
+    // AQE's runtime conversion of a join to a broadcast takes as build
+    // side the shuffle stage that finished first, a race between stages
+    // rather than a property of the round: off here, so the plans are the
+    // ones graft's estimates choose
+    val fresh = withConfs("spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1") {
+      ops.map { case (name, first, more) =>
+        first()
+        val before = compiles
+        more()
+        name -> (compiles - before)
+      }
+    }
+    assert(fresh.forall(_._2 == 0L), s"classes compiled by the longer run: $fresh")
+  }
+
+  test("two operators over one upstream: the second's edge cut compiles nothing") {
+    import org.apache.spark.sql.functions._
+    // an upstream pair plan with its own shuffles, built anew for each
+    // consumer as a query is: documents paired within a length bucket.
+    // The modulus is inlined into the generated code, so each `m` is an
+    // upstream no earlier operator compiled.
+    def pairs(m: Int) = {
+      val d = graft.Tables.t(spark, sf, "documents").filter(col("doc_id") < 120)
+        .select(col("doc_id"), (length(col("text")) % m).as("k"))
+      d.as("l").join(d.as("r"), Seq("k"))
+        .filter(col("l.doc_id") < col("r.doc_id"))
+        .groupBy(col("l.doc_id").as("doc1"), col("r.doc_id").as("doc2")).count()
+        .select("doc1", "doc2")
+    }
+    // one first consumer per edge path: whatever it runs before its
+    // first checkpoint, the second consumer's cut runs the same plan
+    val firsts = Seq[(String, Int, org.apache.spark.sql.DataFrame => Any)](
+      ("min-label CC", 17, Graphs.connectedComponents(_)),
+      ("canonical (truss)", 19, Graphs.trussPeel(_)),
+      ("symmetrize (BFS)", 23, Graphs.bfsLayers(_, n => n % 7 === 0)))
+    val fresh = firsts.map { case (name, m, op) =>
+      op(pairs(m))
+      val before = compiles
+      Graphs.edgeCut(pairs(m))
+      name -> (compiles - before)
+    }
+    assert(fresh.forall(_._2 == 0L), s"classes compiled by the second edge cut: $fresh")
+  }
 }

@@ -188,7 +188,7 @@ class PlanAuditSpec extends SparkSpec {
     "text_lz_complexity" -> 0, // pure narrow scan projection: the whole LZ78 parse runs inside the codegen Expression
     "text_conditional_entropy" -> 4, // conditional leg: marginal window + lang fold; unigram leg: (lang,u) agg + lang fold — all over the checkpointed bigram aggregate (vocab²-bounded)
     "sim_sq8_recall" -> 2, // pair partial-agg on (qid, vec) + final qid fold; per-dim range + 5×64 query codes broadcast (rank windows ride the pair exchange)
-    "graph_onion_layers" -> 4, // r15 fused rounds: the first round of each fused pair stays IN-PLAN (its semi-join degree agg = 2 exchanges × 2 pairs) instead of being its own checkpoint round-trip — measured faster; the dropped-set anti-joins still read checkpoint leaves
+    "graph_onion_layers" -> 0, // every peel round ends in its own checkpoint (was 4 with two rounds per checkpoint: the in-plan round's degree agg); the dropped-set anti-joins read survivor checkpoints of the init estimate, all broadcast
     "events_mannwhitney_ab" -> 3, // per-user agg + mass histogram + the single-row fold; midrank window rides the |masses|-row aggregate
     "sim_graph_search_recall" -> 6, // final top-10/exact rank windows + overlap fold off the checkpointed visited/dotfp tables (search rounds all behind per-round Ckpt.capped)
     "events_session_gap_sweep" -> 4, // ONE user lag window reused by the totals fold + the 6-threshold explode agg (single-row totals frame broadcast, whitelisted)
@@ -209,7 +209,7 @@ class PlanAuditSpec extends SparkSpec {
     "meta_schema_drift" -> 2, // count-distinct expand over the per-key agg
     "events_bottomk_sample" -> 1, // ONE k-bounded sketch agg shuffle, O(k) per group
     "q19_star_join" -> 1, // at gate scale even filtered orders broadcasts: agg shuffle only
-    "text_curation_verdict" -> 6, // hash keeper agg + gram df/doc aggs + 3 doc_id join legs; cluster leg reads its checkpoint
+    "text_curation_verdict" -> 4, // hash keeper agg + gram df/doc aggs + doc_id join legs; the cluster leg reads the CC label checkpoint, which carries the round-0 estimate and joins by broadcast (was 6 with the round-compounded estimate)
     "events_value_histogram" -> 1, // ONE (type, bin) agg, <=64 rows per type
     "occ_temporal_trend" -> 2, // (species, year) count + per-species fold
     "sim_kmeans_assign" -> 0, // final assignment scans the checkpointed projection: ZERO
