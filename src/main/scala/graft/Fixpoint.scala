@@ -5,14 +5,20 @@ import scala.reflect.runtime.universe.TypeTag
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.functions.typedLit
 
-/** The round loop every iterative operator runs: fixed-round peels and
-  * relaxations, convergence loops, and greedy per-round picks.
+/** The round loop every iterative operator runs: fixed-round peels,
+  * relaxations and linear updates (pagerank, label propagation, TextRank,
+  * Markov stationary, power iteration), convergence loops, and greedy
+  * per-round picks. The one round loop it does not drive is
+  * `Analytics.kmeansFit`'s two Lloyd rounds, whose state is K centroids
+  * on the driver, read back as K rows per round.
   *
   * A round loop must cut lineage: without a checkpoint the logical plan
   * grows with every round and the job dies on plan size long before data
-  * size matters. Every checkpoint here is [[Ckpt.capped]], because loops
-  * that join the previous checkpoint several times per round compound
-  * its size estimate geometrically.
+  * size matters. A fixed round count bounds that growth but does not
+  * remove it: an unrolled chain is one plan whose every round compiles
+  * anew at its own stage position. Every checkpoint here is
+  * [[Ckpt.capped]], because loops that join the previous checkpoint
+  * several times per round compound its size estimate geometrically.
   *
   * ONE ROUND PER CHECKPOINT. Every round ends in its own checkpoint.
   * Composing several rounds into one plan per checkpoint saves checkpoint

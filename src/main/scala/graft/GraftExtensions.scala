@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{BpeEncode, CdcChunks, DotF, RollingHash, TokenCount}
+import graft.functions.{BpeEncode, CdcChunks, DotF, Lz78Count, RollingHash, TokenCount}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
@@ -11,31 +11,28 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *
   * or programmatically on a session builder, `.withExtensions(new
   * GraftExtensions)` (as `ExtensionsCheck` does). (`SketchQueries.register`
-  * is the per-session equivalent used by the test harness.)
+  * is the per-session equivalent used by the test harness; both install
+  * [[GraftExtensions.functions]].)
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("rolling_hash"),
-      new ExpressionInfo(classOf[RollingHash].getName, "rolling_hash"),
-      (children: Seq[Expression]) => RollingHash(children.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("token_count"),
-      new ExpressionInfo(classOf[TokenCount].getName, "token_count"),
-      (children: Seq[Expression]) => TokenCount(children.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("bpe_encode"),
-      new ExpressionInfo(classOf[BpeEncode].getName, "bpe_encode"),
-      (children: Seq[Expression]) => BpeEncode(children.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("cdc_chunks"),
-      new ExpressionInfo(classOf[CdcChunks].getName, "cdc_chunks"),
-      (children: Seq[Expression]) => CdcChunks(children.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("dot_f"),
-      new ExpressionInfo(classOf[DotF].getName, "dot_f"),
-      (children: Seq[Expression]) => DotF(children.head, children(1))))
+    GraftExtensions.functions.foreach { case (name, cls, build) =>
+      ext.injectFunction((new FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), build))
+    }
     ext.injectOptimizerRule(session => plans.RangeJoinRule(() =>
       session.conf.get("spark.graft.rangeJoin.binWidth", "0").toLong))
   }
+}
+
+object GraftExtensions {
+  /** Every SQL function graft adds: its name, expression class and
+    * builder. */
+  val functions: Seq[(String, Class[_ <: Expression], Seq[Expression] => Expression)] = Seq(
+    ("rolling_hash", classOf[RollingHash], c => RollingHash(c.head)),
+    ("token_count", classOf[TokenCount], c => TokenCount(c.head)),
+    ("bpe_encode", classOf[BpeEncode], c => BpeEncode(c.head)),
+    ("cdc_chunks", classOf[CdcChunks], c => CdcChunks(c.head)),
+    ("lz78_count", classOf[Lz78Count], c => Lz78Count(c.head)),
+    ("dot_f", classOf[DotF], c => DotF(c.head, c(1))))
 }

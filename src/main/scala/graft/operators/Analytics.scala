@@ -2611,12 +2611,17 @@ object Analytics {
     * d² lattice (≤ 64·2^42 — BIGINT-safe), argmax tie-broken by vec_id.
     * Output: per round the chosen center and the coverage radius AFTER
     * including it (radius_r = max over points of min-d² to centers
-    * 0..r). Plan: fixed-point widening checkpointed once; each round is
-    * ONE scan + TakeOrdered(1) with the min-d² column updated against a
-    * LITERAL center (codegen, no join), checkpointed so round r never
-    * replays rounds < r; at cluster scale the k scans are the honest
-    * greedy cost and each is embarrassingly parallel. Returned plan is
-    * the collected 6-row local relation (shard_rebalance class). */
+    * 0..r). The state min-d² to the chosen set is a function of the
+    * picks, so the loop is [[graft.Fixpoint.greedy]] over the fixed-point
+    * widening checkpointed once: round r gets the coordinates of the r
+    * centers so far as ONE array literal, derives each point's mind from
+    * them (Long.MaxValue before any pick, so round 0 picks the min
+    * vec_id) and picks the argmax — one scan + TakeOrdered(1), a driver
+    * read of one row. k + 1 rounds: the last pick only reads the final
+    * radius. An empty table is the greedy's named error. At cluster scale
+    * the k scans are the honest greedy cost and each is embarrassingly
+    * parallel. Returned plan is the collected 6-row local relation
+    * (shard_rebalance class). */
   def simKcenterCoverage(s: SparkSession, dir: String): DataFrame = {
     val k = 6
     def fx(i: Int) =
@@ -2624,29 +2629,18 @@ object Analytics {
     val emb = t(s, dir, "embeddings")
       .select(col("vec_id") +: (0 until 64).map(i => fx(i).as(s"x$i")): _*)
       .transform(graft.Ckpt.capped)
-    def d2To(c: Array[Long]): org.apache.spark.sql.Column = (0 until 64).map { i =>
-      val d = col(s"x$i") - lit(c(i)); d * d
-    }.reduce(_ + _)
-    def vec(r: org.apache.spark.sql.Row): Array[Long] =
-      Array.tabulate(64)(i => r.getLong(r.fieldIndex(s"x$i")))
-    val c0 = emb.orderBy("vec_id").limit(1).collect()(0)
-    val centers = scala.collection.mutable.ArrayBuffer(c0.getLong(0))
-    var cur = emb.withColumn("mind", d2To(vec(c0)))
-      .transform(graft.Ckpt.capped)
-    val radii = scala.collection.mutable.ArrayBuffer.empty[Long]
-    for (_ <- 1 until k) {
-      val top = cur.orderBy(col("mind").desc, col("vec_id")).limit(1)
-        .collect()(0)
-      radii += top.getLong(top.fieldIndex("mind"))
-      centers += top.getLong(top.fieldIndex("vec_id"))
-      cur = cur.withColumn("mind", least(col("mind"), d2To(vec(top))))
-        .transform(graft.Ckpt.capped)
+    def d2To(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+      (0 until 64).map { i => val d = col(s"x$i") - c(i); d * d }.reduce(_ + _)
+    val picks = graft.Fixpoint.greedy[Seq[Long]]("kcenter_round", k + 1)(
+        r => (0 until 64).map(i => r.getLong(r.fieldIndex(s"x$i")))) { centers =>
+      emb.withColumn("mind",
+          aggregate(centers, lit(Long.MaxValue), (m, c) => least(m, d2To(c))))
+        .orderBy(col("mind").desc, col("vec_id")).limit(1)
     }
-    radii += cur.agg(max("mind")).collect()(0).getLong(0)
     import emb.sparkSession.implicits._
-    centers.toSeq.zip(radii).zipWithIndex
-      .map { case ((c, r), i) => (i.toLong, c, r) }
-      .toDF("round", "center_vec_id", "radius_fp")
+    picks.zip(picks.tail).zipWithIndex.map { case ((c, next), i) =>
+      (i.toLong, c.getLong(0), next.getLong(next.fieldIndex("mind")))
+    }.toDF("round", "center_vec_id", "radius_fp")
   }
 
   private val KCENTER_SQL: String = {
@@ -5138,9 +5132,11 @@ object Analytics {
     * rounds renormalize by max-|component| with truncating division
     * (both engines truncate toward zero — spec-asserted; no floats, no
     * sqrt, so the whole trajectory hash-matches). Per-round state is a
-    * 64-row frame: the max fold is an O(1) driver scalar (the
-    * centroid-fold class), the next matvec broadcasts v. The oracle
-    * replays the identical five rounds as MATERIALIZED CTEs. */
+    * 64-row frame: each round ([[graft.Fixpoint.fixed]]) broadcasts v
+    * into the matvec and renormalizes in its own plan through a max
+    * window over the 64 rows, so no round reads anything back to the
+    * driver. The oracle replays the identical five rounds as
+    * MATERIALIZED CTEs. */
   def simPowerIteration(s: SparkSession, dir: String): DataFrame = {
     val x = t(s, dir, "embeddings")
       .select(col("vec_id"), posexplode(col("embedding")).as(Seq("j", "xf")))
@@ -5151,17 +5147,15 @@ object Analytics {
       .join(x.toDF("vid2", "j", "xj"), col("vec_id") === col("vid2"))
       .groupBy("i", "j").agg(sum(expr("xi * xj")).as("c"))
       .transform(graft.Ckpt.capped) // read by all five matvec rounds
-    var v = s.range(64).select(col("id").as("j"), lit(1048576L).as("v"))
-    for (_ <- 1 to 5) {
-      val y = cov.join(broadcast(v), Seq("j"))
-        .groupBy(col("i")).agg(sum(expr("c * v")).as("y"))
-        .transform(graft.Ckpt.capped) // max fold + renormalize both read it
-      // 64-row driver scalar: the O(1) centroid-fold class, documented
-      val m = y.agg(max(abs(col("y")))).head().getLong(0)
-      val d = math.max(m / 1048576L, 1L)
-      v = y.select(col("i").as("j"), expr(s"y div $d").as("v"))
-    }
-    v.select(col("j").as("dim"), col("v").as("v_fp"))
+    // the unit start as a nullable aggregate, the rounds' schema
+    val v0 = s.range(64).groupBy(col("id").as("j")).agg(min(lit(1048576L)).as("v"))
+      .transform(graft.Ckpt.capped)
+    graft.Fixpoint.fixed(v0, 5) { v =>
+      cov.join(broadcast(v), Seq("j"))
+        .groupBy(col("i").as("j")).agg(sum(expr("c * v")).as("y"))
+        .select(col("j"),
+          expr("y div greatest(max(abs(y)) over () div 1048576, 1)").as("v"))
+    }.select(col("j").as("dim"), col("v").as("v_fp"))
   }
 
   private val POWER_ITER_SQL = {
@@ -5195,9 +5189,9 @@ object Analytics {
     * Σ(v·p) div 2^20 — floor AFTER the sum, engine-identical;
     * deliberately NO per-round renormalization: P's truncated rows sum
     * to ≤ 2^20, so mass only shrinks and nothing can overflow — the
-    * share is normalized ONCE at the end). Fixed round count ⟹ bounded
-    * lineage, no per-round checkpoint (the pagerank lesson); the |types|²
-    * matrix is checkpointed once and broadcast into each tiny step.
+    * share is normalized ONCE at the end). The |types|² matrix is
+    * checkpointed once, and each tiny step joins the broadcast state and
+    * ends in its own checkpoint ([[graft.Fixpoint.fixed]]).
     * Oracle: five unrolled CTE rounds off a MATERIALIZED matrix. */
   def eventsMarkovStationary(s: SparkSession, dir: String): DataFrame = {
     val byPrev = Window.partitionBy("prev")
@@ -5211,13 +5205,14 @@ object Analytics {
       .withColumn("p_fp", expr("n * 1048576 div sum(n) over (partition by prev)"))
       .select("prev", "next", "p_fp")
       .transform(graft.Ckpt.capped) // read by all five steps
-    var v = m.select(col("prev").as("et")).distinct()
-      .withColumn("v", lit(1048576L))
-    for (_ <- 1 to 5)
-      v = m.join(broadcast(v), col("prev") === col("et"))
+    // the uniform start as a nullable aggregate, the steps' schema
+    val v0 = m.groupBy(col("prev").as("et")).agg(min(lit(1048576L)).as("v"))
+      .transform(graft.Ckpt.capped)
+    graft.Fixpoint.fixed(v0, 5) { v =>
+      m.join(broadcast(v), col("prev") === col("et"))
         .groupBy(col("next").as("et2")).agg(expr("sum(v * p_fp) div 1048576").as("v"))
         .withColumnRenamed("et2", "et")
-    v.withColumn("stationary_milli",
+    }.withColumn("stationary_milli",
         expr("v * 1000 div sum(v) over ()"))
       .select(col("et").as("event_type"), col("v").as("v_fp"),
         col("stationary_milli"))

@@ -13,14 +13,15 @@ import org.apache.spark.sql.functions._
   * representative per transitive CLUSTER (a~b, b~c ⇒ keep one of
   * {a,b,c}).
   *
-  * Every loop that checkpoints per round runs through [[graft.Fixpoint]],
-  * which owns the per-round checkpoint, the carried size estimate, the
-  * observed convergence read and the loud failure at the round cap. Every
+  * Every round loop runs through [[graft.Fixpoint]], which owns the
+  * per-round checkpoint, the carried size estimate, the observed
+  * convergence read and the loud failure at the round cap. Every
   * operator first materializes its input edges at the same consumer-free
   * boundary ([[edgeCut]]), so operators over one upstream share its plan.
-  * Fixed-round loops (k-core, truss, onion, BFS, landmark BFS, ancestor
-  * closure) are deterministic on both engines; all but ancestor closure
-  * have oracles that unroll the same rounds as chained CTEs. Convergence
+  * Fixed-round loops (pagerank, label propagation, k-core, truss, onion,
+  * BFS, landmark BFS, ancestor closure) are deterministic on both
+  * engines; all but ancestor closure have oracles that unroll the same
+  * rounds as chained CTEs. Convergence
   * loops (both CC algorithms, Borůvka) read one aggregate observed on
   * each checkpoint action, so no row data reaches the driver.
   */
@@ -60,30 +61,14 @@ object Graphs {
   }
 
   /** (node, cluster_id) for every node in `edges`, cluster_id = min node
-    * id reachable. `edges` needs two long columns (a, b); direction and
-    * duplicates don't matter.
-    *
-    * Two algorithms behind one API:
-    *  - `"min-label"` (default): iterative min-label propagation — two
-    *    shuffles per round, rounds = graph DIAMETER. The right plan for
-    *    near-dup pair graphs, whose components are near-cliques
-    *    (diameter 2-3).
-    *  - `"big-star"`: alternating large-star/small-star contraction
-    *    ([[alternatingCC]]) — three shuffles per round but rounds grow
-    *    LOGARITHMICALLY in component size, so a high-diameter graph
-    *    (paths/grids: the occ_range_fragmentation patch-adjacency class,
-    *    which needed maxIter 64 at sf0.1 under min-label) converges in
-    *    O(log n) rounds instead of O(n). `maxIter` bounds rounds either
-    *    way; both throw loudly on non-convergence. */
-  def connectedComponents(edges: DataFrame, maxIter: Int = 25,
-      algo: String = "min-label"): DataFrame = algo match {
-    case "min-label" => connectedComponentsMinLabel(edges, maxIter)
-    case "big-star"  => alternatingCC(edges, maxIter)._1
-    case other => throw new IllegalArgumentException(
-      s"unknown connectedComponents algo '$other' (min-label | big-star)")
-  }
-
-  private def connectedComponentsMinLabel(edges: DataFrame, maxIter: Int): DataFrame = {
+    * id reachable, by iterative min-label propagation. `edges` needs two
+    * long columns (a, b); direction and duplicates don't matter. Two
+    * shuffles per round, rounds = graph DIAMETER: the right plan for
+    * near-dup pair graphs, whose components are near-cliques (diameter
+    * 2-3). A high-diameter graph (paths/grids) wants [[alternatingCC]],
+    * whose rounds grow LOGARITHMICALLY in component size. `maxIter`
+    * bounds the rounds; running out of them throws. */
+  def connectedComponents(edges: DataFrame, maxIter: Int = 25): DataFrame = {
     // The symmetrizing union reads the edge cut twice, and every round
     // reads it again, never the upstream pair plan.
     val e = edgeCut(edges).toDF("a", "b")
@@ -224,7 +209,7 @@ object Graphs {
     * of the part↔supplier BIPARTITE graph induced by premium line items
     * (l_extendedprice > 104000; supplier nodes offset by 10^8), the
     * "which parts/suppliers form one procurement bloc" readout. This is
-    * the [[alternatingCC]] (`algo = "big-star"`) production caller: the
+    * the [[alternatingCC]] production caller: the
     * bipartite graph mixes a giant hub component with hundreds of small
     * ones (39 components at sf0.01, 286 at sf0.1), exactly the
     * unknown-diameter regime where min-label's O(diameter) rounds are a
@@ -239,7 +224,7 @@ object Graphs {
       .select(col("l_partkey").as("a"),
         (col("l_suppkey") + lit(100000000L)).as("b"))
       .distinct()
-    connectedComponents(edges, maxIter = 30, algo = "big-star")
+    alternatingCC(edges, maxRounds = 30)._1
       .select(col("node"), col("cluster_id"),
         (col("node") < 100000000L).cast("long").as("is_part"))
   }
@@ -753,16 +738,12 @@ object Graphs {
     * in both engines.
     *
     * Plan per round: one (edge ⋈ rank) hash join + one partial-aggregated
-    * sum shuffle. The edge list with degrees is checkpointed ONCE —
-    * before any other action, so the (possibly expensive) edge
-    * construction runs exactly once — and everything downstream reads
-    * the checkpoint. Unlike [[connectedComponents]] (open-ended rounds ⇒
-    * per-round lineage cuts), the FIXED round count bounds lineage at
-    * `iters` join+agg layers, so the loop body needs NO per-round
-    * checkpoint: the whole 5-round chain executes as one job (measured
-    * 5.4 s → per-round eager materialization was pure overhead on the
-    * small pair graph). A deterministic round count is also what keeps
-    * the oracle an unrolled CTE chain. */
+    * sum shuffle, ending in its own checkpoint ([[graft.Fixpoint.fixed]]).
+    * The edge list with degrees is checkpointed ONCE — before any other
+    * action, so the (possibly expensive) edge construction runs exactly
+    * once — and everything downstream reads the checkpoint. A
+    * deterministic round count is what keeps the oracle an unrolled CTE
+    * chain. */
   def pageRank(edges: DataFrame, iters: Int = 5): DataFrame = {
     // the union reads the edge cut twice and sym is referenced twice more
     // (degree fold + join), all off the cut, never the upstream pair plan.
@@ -775,15 +756,16 @@ object Graphs {
     require(n > 0, "pageRank on an empty graph")
     val SCALE = 1073741824L // 2^30
     val tele = SCALE * 3 / 20 / n // 0.15/N, floored — same lattice in SQL
-    var ranks = outE.select(col("a").as("node")).distinct()
-      .withColumn("r", lit(SCALE / n))
-    for (_ <- 1 to iters) {
-      ranks = outE.join(ranks, col("a") === col("node"))
+    // r = min of one literal per node: the uniform start, nullable like
+    // the rounds' sum, so round 0 reads the schema every later round reads
+    val ranks0 = outE.groupBy(col("a").as("node")).agg(min(lit(SCALE / n)).as("r"))
+      .transform(ckpt)
+    graft.Fixpoint.fixed(ranks0, iters) { ranks =>
+      outE.join(ranks, col("a") === col("node"))
         .select(col("b"), expr("(r * 17) div (20 * deg)").as("c"))
         .groupBy("b").agg((sum("c") + lit(tele)).as("r"))
         .select(col("b").as("node"), col("r"))
-    }
-    ranks.select(col("node"), col("r").as("rank_fp"),
+    }.select(col("node"), col("r").as("rank_fp"),
       (col("r").cast("double") / SCALE.toDouble).as("rank_val"))
   }
 
@@ -805,20 +787,21 @@ object Graphs {
     * like graph_pagerank's. Argmax = MIN over (−count, label) structs:
     * a hash aggregate, integer-only, deterministic tie-break (the
     * ivfTopk lesson). Plan: edge list checkpointed once; per round one
-    * (edge ⋈ label) join + two partial-aggregated shuffles; bounded
-    * lineage (fixed rounds) ⇒ no per-round checkpoint. */
+    * (edge ⋈ label) join + two partial-aggregated shuffles, ending in its
+    * own checkpoint ([[graft.Fixpoint.fixed]]). */
   def labelPropagation(edges: DataFrame, iters: Int = 4): DataFrame = {
     val sym = symmetrize(edges).transform(ckpt)
-    var labels = sym.select(col("a").as("node")).distinct()
-      .withColumn("label", col("node"))
-    for (_ <- 1 to iters) {
-      labels = sym.join(labels, col("a") === col("node"))
+    // label = min(node) of the node's own group: the node itself, but
+    // nullable like the rounds' argmin, as min-label CC's round 0
+    val labels0 = sym.groupBy(col("a").as("node")).agg(min(col("a")).as("label"))
+      .transform(ckpt)
+    graft.Fixpoint.fixed(labels0, iters) { labels =>
+      sym.join(labels, col("a") === col("node"))
         .groupBy(col("b"), col("label")).agg(count(lit(1)).as("cnt"))
         .groupBy(col("b"))
         .agg(min(struct((-col("cnt")).as("nc"), col("label").as("l"))).as("m"))
         .select(col("b").as("node"), col("m.l").as("label"))
-    }
-    labels.select(col("node"), col("label").as("community"))
+    }.select(col("node"), col("label").as("community"))
   }
 
   /** Label-propagation communities over the trigram-Jaccard pair graph
@@ -901,12 +884,11 @@ object Graphs {
     * mapping with itself: f ← f∘f, so covered distance doubles. The
     * root must self-loop (dist 0).
     *
-    * Unlike [[pageRank]]'s single-reference loop, each round references
-    * the previous mapping TWICE (both join sides), so without
-    * checkpoints the PLAN doubles per round (2^rounds copies of the base
-    * scan). Non-convergence (2^rounds < tree depth) leaves some anc
-    * short of the root — checked with one anti-join action and failed
-    * LOUDLY, the connectedComponents discipline. */
+    * Each round references the previous mapping TWICE (both join
+    * sides) and ends in its own checkpoint. Non-convergence (2^rounds <
+    * tree depth) leaves some anc short of the root — checked with one
+    * anti-join action and failed LOUDLY, the connectedComponents
+    * discipline. */
   def ancestorClosure(parents: DataFrame, rounds: Int = 6): DataFrame = {
     val p = parents.toDF("node", "anc")
     // a parent pointer targeting a missing node would silently DROP its
@@ -947,11 +929,8 @@ object Graphs {
     * the EXACT ≤R-hop distance (unreached = −1) — well-defined on both
     * engines with no convergence detection; the oracle unrolls the same
     * recurrence as CTEs. Each round references the previous dist table
-    * TWICE (the relaxation source and the left-join base), so — like
-    * [[kcorePeel]]/[[ancestorClosure]], unlike [[labelPropagation]]'s
-    * single-reference loop — the rounds need checkpoints: without them
-    * the plan doubles per round (2^rounds copies of the node-distinct
-    * subtree). */
+    * TWICE (the relaxation source and the left-join base) and ends in
+    * its own checkpoint. */
   def bfsLayers(edges: DataFrame, seed: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
                 rounds: Int = 4): DataFrame = {
     val sym = symmetrize(edges).transform(ckpt)
@@ -1222,14 +1201,14 @@ object Graphs {
     * (arrival_regularity discipline; floors match, all operands
     * nonnegative before the final subtraction). Plan: the pair graph
     * checkpoints once and feeds label propagation, the degree fold and
-    * both endpoint-label joins; labels checkpoint once (3 consumers);
-    * the single-row m fold broadcasts through the whitelisted
-    * crossJoin. */
+    * both endpoint-label joins; the labels' three consumers read the last
+    * round's checkpoint; the single-row m fold broadcasts through the
+    * whitelisted crossJoin. */
   def graphModularity(s: SparkSession, dir: String): DataFrame = {
     val e = TextQueries.dedupNgramJaccard(s, dir)
       .select(col("doc1").as("u"), col("doc2").as("v"))
       .transform(ckpt)
-    val labels = labelPropagation(e).transform(ckpt)
+    val labels = labelPropagation(e)
     val deg = e.select(col("u").as("node"))
       .union(e.select(col("v").as("node")))
       .groupBy("node").agg(count(lit(1)).as("deg"))

@@ -1,9 +1,8 @@
 package graft.operators
 
 import graft.Tables.t
-import graft.functions.{ConvexHullAreaKm2, RollingHash}
+import graft.functions.ConvexHullAreaKm2
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -37,22 +36,10 @@ object SketchQueries {
   type Q = (SparkSession, String) => DataFrame
 
   /** Idempotent session setup: registers graft's custom expressions. */
-  def register(s: SparkSession): Unit = {
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "rolling_hash", (exprs: Seq[Expression]) => RollingHash(exprs.head), "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "token_count",
-      (exprs: Seq[Expression]) => graft.functions.TokenCount(exprs.head), "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bpe_encode",
-      (exprs: Seq[Expression]) => graft.functions.BpeEncode(exprs.head), "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cdc_chunks",
-      (exprs: Seq[Expression]) => graft.functions.CdcChunks(exprs.head), "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "lz78_count",
-      (exprs: Seq[Expression]) => graft.functions.Lz78Count(exprs.head), "built-in")
-  }
+  def register(s: SparkSession): Unit =
+    graft.GraftExtensions.functions.foreach { case (name, _, build) =>
+      s.sessionState.functionRegistry.createOrReplaceTempFunction(name, build, "built-in")
+    }
 
   def dedupMinhashLsh(s: SparkSession, dir: String): DataFrame =
     minhashPairs(t(s, dir, "documents"))

@@ -1540,8 +1540,7 @@ object TextPrep {
     * merge list; this operator is where such a list comes from): the
     * classic greedy loop — count adjacent symbol pairs over the corpus,
     * merge the most frequent, repeat — run for a FIXED 6 rounds (fixed
-    * ⟹ bounded lineage and an unrollable oracle, the pagerank
-    * discipline).
+    * ⟹ an unrollable oracle).
     *
     * Scale shape: every round operates on the DISTINCT-WORD frequency
     * dict (vocab-sized, never corpus-sized — exactly how production BPE

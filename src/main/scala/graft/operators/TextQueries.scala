@@ -983,8 +983,9 @@ object TextQueries {
     * merely-common one; the weighted walk can. Plan: one doc_id window
     * exchange builds the pair stream, one (a,b) aggregate; the ≤|vocab|²
     * weighted edge relation checkpoints once and each round is a tiny
-    * join + aggregate; the oracle unrolls the same five rounds as
-    * chained CTEs (graph_pagerank discipline). */
+    * join + aggregate ending in its own checkpoint
+    * ([[graft.Fixpoint.fixed]]); the oracle unrolls the same five rounds
+    * as chained CTEs. */
   def textTextrankKeywords(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("doc_id").orderBy("pos")
     val base = t(s, dir, "documents")
@@ -1007,15 +1008,15 @@ object TextQueries {
     require(n > 0, "textrank on an empty co-occurrence graph")
     val SCALE = 1073741824L // 2^30
     val tele = SCALE * 3 / 20 / n
-    var ranks = outE.select(col("a").as("node")).distinct()
-      .withColumn("r", lit(SCALE / n))
-    for (_ <- 1 to 5) {
-      ranks = outE.join(ranks, col("a") === col("node"))
+    // the uniform start as a nullable aggregate, the rounds' schema
+    val ranks0 = outE.groupBy(col("a").as("node")).agg(min(lit(SCALE / n)).as("r"))
+      .transform(graft.Ckpt.capped)
+    graft.Fixpoint.fixed(ranks0, 5) { ranks =>
+      outE.join(ranks, col("a") === col("node"))
         .select(col("b"), expr("((r * cw) div wdeg) * 17 div 20").as("c"))
         .groupBy("b").agg((sum("c") + lit(tele)).as("r"))
         .select(col("b").as("node"), col("r"))
-    }
-    ranks.select(col("node").as("word"), col("r").as("rank_fp"),
+    }.select(col("node").as("word"), col("r").as("rank_fp"),
       (col("r").cast("double") / SCALE.toDouble).as("rank_val"))
   }
 

@@ -5,6 +5,7 @@ import scala.concurrent.duration.FiniteDuration
 
 import org.apache.spark.sql.catalyst.expressions.{Attribute, ExpressionSet, IsNotNull}
 import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning}
 import org.apache.spark.sql.classic.{Dataset => CDataset, SparkSession => CSparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 
@@ -74,17 +75,7 @@ object GraftStatsCheckpoint {
         val attrs = cols.map(c => lr.output.find(_.name == c).getOrElse(
           throw new IllegalArgumentException(
             s"localCheckpointHashPartitioned: no column '$c' in ${lr.output}")))
-        val part = org.apache.spark.sql.catalyst.plans.physical
-          .HashPartitioning(attrs, numParts)
-        val st = lr.computeStats()
-        val capped = Statistics(
-          sizeInBytes = st.sizeInBytes.min(Cap),
-          rowCount = st.rowCount.map(_.min(Cap)))
-        val spark = ck.sparkSession.asInstanceOf[CSparkSession]
-        CDataset.ofRows(spark,
-          new LogicalRDD(lr.output, lr.rdd, part,
-            lr.outputOrdering, lr.isStreaming, lr.stream)(
-            spark, Some(capped), Some(lr.constraints)))
+        withStats(ck, lr.computeStats(), Some(HashPartitioning(attrs, numParts)))
       case _ => ck
     }
   }
@@ -101,10 +92,12 @@ object GraftStatsCheckpoint {
   def withStatsOf(ck: DataFrame, like: DataFrame): DataFrame =
     withStats(ck, like.queryExecution.optimizedPlan.stats)
 
-  private def withStats(ck: DataFrame, st: Statistics): DataFrame = releaf(ck) { lr =>
-    (lr.output, Statistics(sizeInBytes = st.sizeInBytes.min(Cap),
-      rowCount = st.rowCount.map(_.min(Cap))), lr.constraints)
-  }
+  private def withStats(ck: DataFrame, st: Statistics,
+      partitioning: Option[Partitioning] = None): DataFrame =
+    releaf(ck, partitioning) { lr =>
+      (lr.output, Statistics(sizeInBytes = st.sizeInBytes.min(Cap),
+        rowCount = st.rowCount.map(_.min(Cap))), lr.constraints)
+    }
 
   /** The checkpoint `ck` re-wrapped with every column nullable in its
     * schema, and each column that was not nullable constrained
@@ -122,16 +115,16 @@ object GraftStatsCheckpoint {
   }
 
   /** `ck`'s checkpoint leaf rebuilt with the output, statistics and
-    * constraints `f` gives; no job runs. A frame that is not a checkpoint
-    * is returned as it is. */
-  private def releaf(ck: DataFrame)(
+    * constraints `f` gives, and with `partitioning` when one is given;
+    * no job runs. A frame that is not a checkpoint is returned as it is. */
+  private def releaf(ck: DataFrame, partitioning: Option[Partitioning] = None)(
       f: LogicalRDD => (Seq[Attribute], Statistics, ExpressionSet)): DataFrame =
     ck.queryExecution.analyzed match {
       case lr: LogicalRDD =>
         val (output, stats, constraints) = f(lr)
         val spark = ck.sparkSession.asInstanceOf[CSparkSession]
         CDataset.ofRows(spark,
-          new LogicalRDD(output, lr.rdd, lr.outputPartitioning,
+          new LogicalRDD(output, lr.rdd, partitioning.getOrElse(lr.outputPartitioning),
             lr.outputOrdering, lr.isStreaming, lr.stream)(
             spark, Some(stats), Some(constraints)))
       case _ => ck

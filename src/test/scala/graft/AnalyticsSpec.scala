@@ -1570,6 +1570,23 @@ class AnalyticsSpec extends SparkSpec {
     rows.foreach { case (_, _, r) => assert(r >= 0L) }
   }
 
+  /** An sf directory whose embeddings table has the schema and no rows. */
+  private lazy val noEmbeddings: String = {
+    val dir = java.nio.file.Files.createTempDirectory("emb_empty").toString
+    spark.read.parquet(s"$sf/embeddings.parquet").limit(0)
+      .write.parquet(s"$dir/embeddings.parquet")
+    dir
+  }
+
+  test("k-center greedy over no embeddings is the greedy's named error") {
+    val e = intercept[IllegalStateException](Analytics.simKcenterCoverage(spark, noEmbeddings))
+    assert(e.getMessage.contains("kcenter_round_0"), e.getMessage)
+  }
+
+  test("power iteration over no embeddings returns no rows") {
+    assert(Analytics.simPowerIteration(spark, noEmbeddings).collect().isEmpty)
+  }
+
   test("facility location greedy: costs non-increasing, gains diminish, centers distinct") {
     val rows = Analytics.simFacilityLocation(spark, sf)
       .as[(Long, Long, Long)].collect().sortBy(_._1)

@@ -62,12 +62,12 @@ class GraphsSpec extends SparkSpec {
     val got = labels.as[(Long, Long)].collect()
     assert(got.length === n)
     assert(got.forall(_._2 === 0L), "single component rooted at min id 0")
-    // same API, algo switch: big-star through connectedComponents agrees
-    // with min-label (and union-find) on a random multi-component graph
+    // big-star agrees with union-find (and so with min-label) on a random
+    // multi-component graph
     val rnd = new Random(41)
     val edges = Seq.fill(150)((rnd.nextInt(200).toLong, rnd.nextInt(200).toLong))
       .filter { case (a, b) => a != b }
-    val bs = Graphs.connectedComponents(edges.toDF("a", "b"), algo = "big-star")
+    val bs = Graphs.alternatingCC(edges.toDF("a", "b"))._1
       .as[(Long, Long)].collect().toMap
     assert(bs === referenceCC(edges))
   }
@@ -97,7 +97,7 @@ class GraphsSpec extends SparkSpec {
   test("big-star CC fails loudly when maxRounds is too small") {
     val chain = (0L until 40L).map(i => (i, i + 1)).toDF("a", "b")
     val e = intercept[IllegalStateException] {
-      Graphs.connectedComponents(chain, maxIter = 2, algo = "big-star")
+      Graphs.alternatingCC(chain, maxRounds = 2)
     }
     assert(e.getMessage.contains("did not converge"))
   }
@@ -111,7 +111,7 @@ class GraphsSpec extends SparkSpec {
     // returns no rows
     val ops: Seq[(String, DataFrame => DataFrame, Set[Seq[Any]])] = Seq(
       ("min-label CC", Graphs.connectedComponents(_), Set(Seq(1L, 1L), Seq(2L, 1L))),
-      ("big-star CC", Graphs.connectedComponents(_, algo = "big-star"),
+      ("big-star CC", Graphs.alternatingCC(_)._1,
         Set(Seq(1L, 1L), Seq(2L, 1L))),
       ("boruvka", e => Graphs.boruvkaMsf(e.withColumn("w", col("a") + col("b"))),
         Set(Seq(1L, 2L, 3L))),
@@ -601,7 +601,8 @@ class GraphsSpec extends SparkSpec {
       Seq((4L, 5L), (5L, 6L))
     def tree(n: Long) = (1L to n).map(v => (v, math.max(v / 2, 1L))).toDF("node", "anc")
     // (operator, a run, a run with more rounds): every round runs while
-    // the operator builds its plan
+    // the operator builds its plan; the collects run the final projections
+    // too (and, in an unrolled chain, would run the rounds themselves)
     val ops: Seq[(String, () => Any, () => Any)] = Seq(
       ("min-label CC", () => Graphs.connectedComponents(path(6)),
         () => Graphs.connectedComponents(path(14))),
@@ -618,7 +619,11 @@ class GraphsSpec extends SparkSpec {
       ("ancestor closure", () => Graphs.ancestorClosure(tree(64), rounds = 3),
         () => Graphs.ancestorClosure(tree(64), rounds = 6)),
       ("Boruvka", () => Graphs.boruvkaMsfRounds(weighted(8), 32),
-        () => Graphs.boruvkaMsfRounds(weighted(200), 32)))
+        () => Graphs.boruvkaMsfRounds(weighted(200), 32)),
+      ("pagerank", () => Graphs.pageRank(path(10), iters = 2).collect(),
+        () => Graphs.pageRank(path(10), iters = 5).collect()),
+      ("label propagation", () => Graphs.labelPropagation(path(10), iters = 2).collect(),
+        () => Graphs.labelPropagation(path(10), iters = 5).collect()))
     // AQE's runtime conversion of a join to a broadcast takes as build
     // side the shuffle stage that finished first, a race between stages
     // rather than a property of the round: off here, so the plans are the

@@ -193,7 +193,7 @@ class PlanAuditSpec extends SparkSpec {
     "sim_graph_search_recall" -> 6, // final top-10/exact rank windows + overlap fold off the checkpointed visited/dotfp tables (search rounds all behind per-round Ckpt.capped)
     "events_session_gap_sweep" -> 4, // ONE user lag window reused by the totals fold + the 6-threshold explode agg (single-row totals frame broadcast, whitelisted)
     "data_datasheet" -> 10, // four single-row component folds (totals/langs/sources/pairs) off the checkpointed doc-stat + pair relations; the joins are all whitelisted 1×1 crossJoins
-    "graph_pagerank" -> 6, // init distinct + 5 fixed-round rank aggs off the checkpointed edges
+    "graph_pagerank" -> 0, // every round ends in its own checkpoint (was 6, the unrolled rounds' aggs): the returned plan projects the last
     "events_cusum" -> 2, // per-type target agg (broadcast back) + ONE window exchange
     "data_compact_files" -> 3, // bucket totals agg + 32-row offsets window + per-bucket cumsum
     "data_bloom_gate" -> 4, // member distinct + 2048-word filter agg + probe distinct + bool_and
@@ -201,7 +201,7 @@ class PlanAuditSpec extends SparkSpec {
     "text_surprisal" -> 4, // vocab agg (planned twice: join side + total fold) + total + doc agg
     "dedup_paragraphs" -> 2, // paragraph-hash agg; count-distinct expand
     "multimodal_dedup_bytes" -> 1, // ONE (md5, len) agg; hashes only, payloads stay in the scan
-    "graph_communities" -> 9, // init distinct + 4 fixed rounds x (label count + argmin agg)
+    "graph_communities" -> 0, // every round ends in its own checkpoint (was 9, the unrolled rounds' count + argmin aggs): the returned plan projects the last
     "data_mixture_sample" -> 1, // ONE lang-partitioned rank window; quotas broadcast
     "graph_ancestor_closure" -> 0, // returned plan reads the final checkpoint: ZERO
     "dedup_incremental_exact" -> 2, // batch min-id agg + index-hash distinct; AQE broadcasts both
@@ -406,10 +406,10 @@ class PlanAuditSpec extends SparkSpec {
     "events_haar_energy" -> 4, // hourly agg + block agg + scale agg + dominant window; dims broadcast
     "events_forecast_backtest" -> 4, // hourly agg + three forecast-leg aggs; joins AQE-sized, fence broadcast
     "events_burstiness" -> 2, // (type, hour) agg + <=|types|-row fold
-    "sim_power_iteration" -> 0, // returned plan reads the round-5 checkpointed 64-row frame
+    "sim_power_iteration" -> 0, // returned plan projects the round-5 checkpoint; each round renormalizes through its own max window, no driver read
     "data_near_dup_rate" -> 2, // block agg + single-row conditional fold
     "graph_bipartite_components" -> 2, // edge distinct + label join off the big-star checkpoints
-    "events_markov_stationary" -> 7, // transition agg + row window + 5 tiny fixed-round matvec aggs
+    "events_markov_stationary" -> 1, // the share's total window over the round-5 checkpoint (was 7: the unrolled rounds and the transition build; every step now ends in its own checkpoint)
     "data_order_autocorr" -> 4, // shard window + adjacency fold + source agg + 1-row combine
     "data_shard_skew_gini" -> 2, // bucket agg + aggregate-sized rank window
     "dedup_lsh_band_tuning" -> 0, // 7 narrow S-curve projections over the checkpointed <=11-row histogram
@@ -486,7 +486,7 @@ class PlanAuditSpec extends SparkSpec {
     "data_padding_waste" -> 2, // narrow codegen cap projection; single-distinct |sources|-row agg
     "events_record_days" -> 2, // (type,day) agg; running-max + row_number windows ride ONE event_type exchange
     "sim_triplet_margin_audit" -> 4, // ranked rel checkpointed at build; two rank-equi self-joins + broadcast next-label map + |labels|-row agg
-    "sim_kcenter_coverage" -> 0, // returned plan is the collected 6-row greedy local relation (shard_rebalance class); rounds run at build
+    "sim_kcenter_coverage" -> 0, // returned plan is the collected 6-row greedy local relation (shard_rebalance class); Fixpoint.greedy rounds run at build
     "events_spc_rules" -> 2, // (type,day) agg; stat windows + lag window + final agg ride ONE event_type exchange
     "graph_two_hop_reach" -> 5, // canonical edges checkpointed; wedge join + distinct + deg agg + reach join
     "text_term_burstiness" -> 2, // (term,doc) agg + vocab rollup; rank window rides the ≤|vocab|-row aggregate
@@ -500,7 +500,7 @@ class PlanAuditSpec extends SparkSpec {
     "data_hash_width_audit" -> 2, // hashed projection; per-width distinct-count legs
     "events_peak_to_mean" -> 2, // (type, hour) agg + |types|-row max_by fold
     "spatial_zone_pruning_audit" -> 2, // two aggs of one codegen scan; 16×32 envelope BNLJ whitelisted (layout constants)
-    "text_textrank_keywords" -> 6, // doc window + pair agg at build (checkpointed); 5 weighted-PR rounds each a tiny join+agg — returned plan: round-5 join+agg off the checkpoint
+    "text_textrank_keywords" -> 0, // doc window + pair agg at build (checkpointed); every weighted-PR round ends in its own checkpoint (was 6, the unrolled rounds): the returned plan projects the last
     "events_silence_streaks" -> 2, // (type,day) agg; lag window + final agg ride ONE event_type exchange
     "data_vocab_coverage" -> 2, // (source,term) agg checkpointed; vocab rank window rides the term rollup, joins back broadcast
     "events_markov_entropy_rate" -> 3, // user lead window + (prev,next) agg; row-total/total windows + fold ride the tiny transition table

@@ -359,15 +359,31 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("GraftExtensions injects rolling_hash into a fresh session") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.catalyst.analysis.{FunctionRegistry, SimpleFunctionRegistry}
+    // the extension path: the functions a session builder would install
     val ext = new org.apache.spark.sql.SparkSessionExtensions
-    new GraftExtensions().apply(ext) // builder wiring smoke test
-    SketchQueries_registerCheck()
-  }
-
-  private def SketchQueries_registerCheck(): Unit = {
+    new GraftExtensions().apply(ext)
+    // `registerFunctions` is private[sql] in Scala and public in bytecode
+    val injected = ext.getClass.getMethod("registerFunctions", classOf[FunctionRegistry])
+      .invoke(ext, new SimpleFunctionRegistry).asInstanceOf[FunctionRegistry]
+    // the per-session path
     operators.SketchQueries.register(spark)
+    val session = spark.sessionState.functionRegistry
+    // every name builds its expression through both (two children cover
+    // every arity)
+    val args = Seq.fill(2)(org.apache.spark.sql.catalyst.expressions.Literal("x"))
+    for ((name, cls, _) <- GraftExtensions.functions; reg <- Seq(injected, session)) {
+      val built = reg.lookupFunctionBuilder(FunctionIdentifier(name)).map(_(args))
+      assert(built.map(_.getClass) === Some(cls), s"$name in $reg")
+    }
+    assert(GraftExtensions.functions.map(_._1).toSet ===
+      Set("rolling_hash", "token_count", "bpe_encode", "cdc_chunks", "lz78_count", "dot_f"))
     val v = spark.sql("SELECT rolling_hash('abc') AS h").as[Long].head()
     assert(v === functions.RollingHash.hashBytes("abc".getBytes("UTF-8")))
+    val dot = spark.sql("SELECT dot_f(array(CAST(1.5 AS FLOAT)), array(CAST(2.0 AS FLOAT)))")
+      .as[Double].head()
+    assert(dot === 3.0)
   }
 
   test("manifest zone-map scan prunes files and agrees with the full filtered read") {
