@@ -50,16 +50,22 @@ import org.apache.spark.sql.functions.typedLit
   * and the rounds after it (which read a round's output) compile
   * different classes, e.g. when an aggregate's nullable `min` replaces a
   * non-null column of `init`. And every state carries `init`'s size
-  * estimate ([[carry]]), because join strategies follow the estimate.
+  * estimate, because join strategies follow the estimate: a round that
+  * joins its state multiplies that estimate into its output's, so it
+  * would compound round over round, and rounds that compute the same
+  * thing would plan different join strategies and build sides. A loop
+  * declares the carried estimate where it takes the checkpoint: its next
+  * state is `Ckpt.capped(round, Some(state))`, or [[observe]] with the
+  * round's input state.
   */
 object Fixpoint {
 
   /** The states S_0 = `init` .. S_rounds of `rounds` applications of
-    * `step`; each after `init` is a checkpoint carrying `init`'s
-    * estimate. */
+    * `step`; each after `init` is a checkpoint carrying the previous
+    * state's estimate, hence `init`'s. */
   def states(init: DataFrame, rounds: Int)(
       step: DataFrame => DataFrame): IndexedSeq[DataFrame] =
-    Iterator.iterate(init)(s => carry(s, Ckpt.capped(step(s))))
+    Iterator.iterate(init)(s => Ckpt.capped(step(s), Some(s)))
       .take(rounds + 1).toIndexedSeq
 
   /** The last of [[states]]. */
@@ -73,18 +79,6 @@ object Fixpoint {
   def converge(op: String, maxRounds: Int, raise: String)(round: Int => Boolean): Int =
     (0 until maxRounds).find(round).map(_ + 1).getOrElse(throw new IllegalStateException(
       s"$op did not converge in $maxRounds rounds; raise $raise"))
-
-  /** `next`, the checkpoint of a round that read the loop state `state`,
-    * as the loop's next state: it carries `state`'s size estimate instead
-    * of the one Catalyst derived for the round. A round that joins its
-    * state multiplies that estimate into its output's, so without the
-    * carry the estimate compounds round over round until it reaches the
-    * cap, and join strategies and build sides change on the way: rounds
-    * that compute the same thing plan, and compile, different code. With
-    * it every round plans over a leaf of the same estimate. States are
-    * bare checkpoints, so `state`'s plan estimate is its leaf's. */
-  def carry(state: DataFrame, next: DataFrame): DataFrame =
-    org.apache.spark.sql.GraftStatsCheckpoint.withStatsOf(next, state)
 
   /** Greedy selection of `k` picks. Round r (0-based) gets the keys of
     * the r picks so far as ONE array literal (`typedLit`, so the round's
@@ -110,16 +104,18 @@ object Fixpoint {
 
   /** Checkpoints `df` with `metrics` observed on the checkpoint action
     * (one job for both) and returns the checkpoint and the metric values
-    * by name. The metric fires because `localCheckpoint` runs through
-    * `withAction`, so it has arrived when the checkpoint returns; a
-    * bounded wait on the observation's own future guards the read, and a
-    * metric that has not arrived within 10 s is a named error (a bare
-    * `obs.get` would block forever). A metric over no rows reads null;
-    * that is a named error too, never a silent zero. */
-  def observe(df: DataFrame, name: String, metrics: Column*)
+    * by name. A round of a loop passes its input `state`, whose estimate
+    * the checkpoint then carries; any other read passes None. The metric
+    * fires because `localCheckpoint` runs through `withAction`, so it has
+    * arrived when the checkpoint returns; a bounded wait on the
+    * observation's own future guards the read, and a metric that has not
+    * arrived within 10 s is a named error (a bare `obs.get` would block
+    * forever). A metric over no rows reads null; that is a named error
+    * too, never a silent zero. */
+  def observe(df: DataFrame, name: String, state: Option[DataFrame], metrics: Column*)
       : (DataFrame, Map[String, Any]) = {
     val obs = Observation(name)
-    val ck = Ckpt.capped(df.observe(obs, metrics.head, metrics.tail: _*))
+    val ck = Ckpt.capped(df.observe(obs, metrics.head, metrics.tail: _*), state)
     val row = org.apache.spark.sql.GraftStatsCheckpoint
       .observedRow(obs, ObserveTimeout)
       .getOrElse(throw new IllegalStateException(

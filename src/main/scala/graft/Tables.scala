@@ -29,35 +29,24 @@ object Tables {
       key => key._1.read.parquet(key._2))
 }
 
-/** Oracle hash-match discipline (SURVEY.md §4).
-  *
-  * Double addition is not associative, so a plain `sum(double)` depends on
-  * partition order and will not reproduce DuckDB bit-for-bit. We instead
-  * cast every *base factor* to DECIMAL before arithmetic: decimal products
-  * and sums are exact and order-independent, and the single final
-  * decimal→double conversion is deterministic in both engines.
-  */
-/** Repo-wide checkpoint entry point: every `.localCheckpoint()` in
-  * operator code routes through the stats-capped variant
-  * ([[org.apache.spark.sql.GraftStatsCheckpoint]]). Plain localCheckpoint
-  * carries the origin plan's Statistics onto the new leaf; iterative
-  * loops that join the previous round's checkpoint more than once per
-  * round compound sizeInBytes GEOMETRICALLY until Catalyst planning
-  * hangs multiplying million-digit BigInts (caught by ScaleSpec's
-  * Borůvka probe, r9). The cap (Long.MaxValue) is a passthrough for
-  * sane stats and can never flip a broadcast decision — it only touches
-  * estimates already >8 EB, far beyond any autoBroadcastJoinThreshold —
-  * so converting non-loop sites is free inoculation. */
+/** Every checkpoint in operator code: one eager `localCheckpoint` whose
+  * leaf declares its size estimate and its layout
+  * ([[org.apache.spark.sql.GraftStatsCheckpoint.localCheckpoint]] gives
+  * the reasons for both). */
 object Ckpt {
-  def capped(df: DataFrame): DataFrame =
-    org.apache.spark.sql.GraftStatsCheckpoint.localCheckpointCapped(df)
+  /** `df` checkpointed with its own estimate, capped at Long.MaxValue. */
+  def capped(df: DataFrame): DataFrame = capped(df, None)
 
-  /** `repartition(n, cols)` + localCheckpoint + re-stamp of the hash
-    * layout the checkpoint provably has (AQE records Unknown otherwise —
-    * see GraftStatsCheckpoint.localCheckpointHashPartitioned). Use for
-    * any checkpointed relation whose consumers join/aggregate on `cols`:
-    * the consumers go exchange-free AND keep the checkpoint's width
-    * instead of riding a tiny re-exchange that AQE coalesces to one
+  /** `df` checkpointed as a loop's next state: with `state`'s estimate
+    * when one is given, so that the loop's rounds plan over leaves of one
+    * estimate. */
+  def capped(df: DataFrame, state: Option[DataFrame]): DataFrame =
+    org.apache.spark.sql.GraftStatsCheckpoint.localCheckpoint(df, estimateOf = state)
+
+  /** `repartition(n, cols)` + a checkpoint that declares that hash layout.
+    * Use for any checkpointed relation whose consumers join/aggregate on
+    * `cols`: the consumers go exchange-free AND keep the checkpoint's
+    * width instead of riding a tiny re-exchange that AQE coalesces to one
     * task ahead of a fan-out. */
   def hashed(df: DataFrame, numParts: Int, cols: String*): DataFrame =
     stamp(df.repartition(numParts, cols.map(df.col): _*), numParts, cols: _*)
@@ -116,10 +105,18 @@ object Ckpt {
     * partitioning-preserving operators (e.g. a dedup aggregate fused onto
     * the same exchange). The caller owns that contract. */
   def stamp(df: DataFrame, numParts: Int, cols: String*): DataFrame =
-    org.apache.spark.sql.GraftStatsCheckpoint.localCheckpointHashPartitioned(
-      df, cols, numParts)
+    org.apache.spark.sql.GraftStatsCheckpoint.localCheckpoint(df,
+      layout = Some((numParts, cols)))
 }
 
+/** Oracle hash-match discipline (SURVEY.md §4).
+  *
+  * Double addition is not associative, so a plain `sum(double)` depends on
+  * partition order and will not reproduce DuckDB bit-for-bit. We instead
+  * cast every *base factor* to DECIMAL before arithmetic: decimal products
+  * and sums are exact and order-independent, and the single final
+  * decimal→double conversion is deterministic in both engines.
+  */
 object Determinism {
   def dec2(c: Column): Column = c.cast(DecimalType(18, 2))
 

@@ -98,13 +98,13 @@ object Graphs {
     graft.Fixpoint.converge("connectedComponents", maxIter,
         raise = "maxIter (the graph diameter exceeds it)") { iter =>
       val (next, m) = graft.Fixpoint.observe(round(labels), s"cc_round_$iter",
-        coalesce(sum(col("label").cast("decimal(38,0)")),
+        Some(labels), coalesce(sum(col("label").cast("decimal(38,0)")),
           lit(0).cast("decimal(38,0)")).as("ls"))
       val s = m("ls").asInstanceOf[java.math.BigDecimal]
         .stripTrailingZeros.toPlainString
       val done = prevSum.contains(s)
       prevSum = Some(s)
-      labels = graft.Fixpoint.carry(labels, next)
+      labels = next
       done
     }
     labels.select(col("node"), col("label").as("cluster_id"))
@@ -143,11 +143,7 @@ object Graphs {
     val nodes = e0.select(col("u").as("node"))
       .union(e0.select(col("v").as("node"))).distinct()
       .transform(ckpt) // reused after the loop; don't replay the scan
-    // round 0 reads the edges with a round output's schema: the star
-    // minima are window mins, so a round's (u, v) are both nullable, and
-    // a non-null round-0 leaf would compile classes no later round uses
-    var cur = org.apache.spark.sql.GraftStatsCheckpoint
-      .withNullableOutput(e0.transform(ckpt))
+    var cur = e0.transform(ckpt)
     // (count, Σ xxhash64) edge-set checksum. Hash sum in DECIMAL(38,0):
     // a BIGINT sum of ±2^63 hashes overflows under ANSI on a few
     // thousand rows.
@@ -164,11 +160,11 @@ object Graphs {
     val rounds = graft.Fixpoint.converge("alternatingCC", maxRounds,
         raise = "maxRounds") { r =>
       val (small, m) = graft.Fixpoint.observe(starRound(cur), s"bigstar_$r",
-        checksumCols: _*)
+        Some(cur), checksumCols: _*)
       val sum1 = checksum(m)
       val converged = sum1 == prev
       prev = sum1
-      cur = graft.Fixpoint.carry(cur, small)
+      cur = small
       converged
     }
     val labels = nodes
@@ -389,14 +385,19 @@ object Graphs {
       .distinct().withColumn("comp", col("node"))
       .transform(ckpt)
     val picked = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    // Every join below is a sort-merge join by hint. AQE would convert a
+    // small one to a broadcast at run time, building on whichever shuffle
+    // stage finished first, so the same round plan would compile new
+    // classes by timing alone.
     val rounds = graft.Fixpoint.converge("boruvkaMsf", maxRounds,
         raise = "maxRounds (component count halves per round)") { round =>
       // the active-edge count is observed on the checkpoint, which comes
       // BEFORE the count check so that the check does not replay the join
       val (e, m) = graft.Fixpoint.observe(und
-        .join(comp.toDF("u", "cu"), Seq("u"))
-        .join(comp.toDF("v", "cv"), Seq("v"))
-        .filter(col("cu") =!= col("cv")), s"boruvka_e_$round", count(lit(1)).as("cnt"))
+        .join(comp.toDF("u", "cu").hint("merge"), Seq("u"))
+        .join(comp.toDF("v", "cv").hint("merge"), Seq("v"))
+        .filter(col("cu") =!= col("cv")), s"boruvka_e_$round", None,
+        count(lit(1)).as("cnt"))
       if (m("cnt") == 0L) true
       else {
         // per-component minimum outgoing edge (min-struct: w is unique,
@@ -426,7 +427,7 @@ object Graphs {
             .as("p"))
         // (c, p, mv): mv = whether the last jump moved p; the pointer
         // checkpoint keeps it so that every jump reads one leaf schema
-        var ptr = p0.join(p0.toDF("p", "pp"), Seq("p"))
+        var ptr = p0.join(p0.toDF("p", "pp").hint("merge"), Seq("p"))
           .select(col("c"),
             when(col("pp") === col("c"), least(col("c"), col("p")))
               .otherwise(col("p")).as("p"),
@@ -436,17 +437,18 @@ object Graphs {
         graft.Fixpoint.converge("boruvkaMsf pointer jumping", maxRounds,
             raise = "maxRounds") { jump =>
           val (nxt, mv) = graft.Fixpoint.observe(ptr.toDF("c0", "p0", "m0")
-            .join(ptr.toDF("p0", "p1", "m1"), Seq("p0"))
+            .join(ptr.toDF("p0", "p1", "m1").hint("merge"), Seq("p0"))
             .select(col("c0").as("c"), col("p1").as("p"),
               (col("p1") =!= col("p0")).cast("long").as("mv")),
-            s"boruvka_jump_${round}_$jump", coalesce(sum("mv"), lit(0L)).as("mv"))
-          ptr = graft.Fixpoint.carry(ptr, nxt)
+            s"boruvka_jump_${round}_$jump", Some(ptr),
+            coalesce(sum("mv"), lit(0L)).as("mv"))
+          ptr = nxt
           mv("mv") == 0L
         }
-        comp = graft.Fixpoint.carry(comp,
-          comp.join(ptr.toDF("comp", "root", "mv"), Seq("comp"), "left_outer")
-            .select(col("node"), coalesce(col("root"), col("comp")).as("comp"))
-            .transform(ckpt))
+        comp = graft.Ckpt.capped(
+          comp.join(ptr.toDF("comp", "root", "mv").hint("merge"), Seq("comp"), "left_outer")
+            .select(col("node"), coalesce(col("root"), col("comp")).as("comp")),
+          Some(comp))
         false
       }
     }

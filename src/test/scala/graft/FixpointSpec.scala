@@ -10,16 +10,30 @@ class FixpointSpec extends SparkSpec {
 
   test("observed read: a metric over no rows is a named error, never an NPE or a zero") {
     val e = intercept[IllegalStateException] {
-      Fixpoint.observe(Seq.empty[Long].toDF("x"), "probe_empty", min(col("x")).as("mx"))
+      Fixpoint.observe(Seq.empty[Long].toDF("x"), "probe_empty", None, min(col("x")).as("mx"))
     }
     assert(e.getMessage.contains("probe_empty") && e.getMessage.contains("'mx'"),
       e.getMessage)
-    val (ck, m) = Fixpoint.observe(Seq(3L, 1L, 2L).toDF("x"), "probe_rows",
+    val (ck, m) = Fixpoint.observe(Seq(3L, 1L, 2L).toDF("x"), "probe_rows", None,
       min(col("x")).as("mx"), count(lit(1)).as("n"))
     assert(m === Map("mx" -> 1L, "n" -> 3L))
     assert(ck.queryExecution.logical.isInstanceOf[LogicalRDD], "read must checkpoint")
     assert(ck.as[Long].collect().sorted.toSeq === Seq(1L, 2L, 3L))
+    // a round that joins its state twice: the checkpoint carries the
+    // state's estimate, not the join's product
+    val state = Ckpt.capped((1L to 8L).map(i => (i, i)).toDF("k", "v"))
+    val (next, _) = Fixpoint.observe(selfJoin(state), "probe_state", Some(state),
+      count(lit(1)).as("n"))
+    assert(estimate(next) === estimate(state))
+    assert(estimate(selfJoin(state).localCheckpoint()) !== estimate(state),
+      "the probe round must change the estimate it does not carry")
   }
+
+  private def selfJoin(s: DataFrame): DataFrame =
+    s.join(s.toDF("k", "w"), "k").select(col("k"), (col("v") + col("w")).as("v"))
+
+  private def estimate(df: DataFrame): BigInt =
+    df.queryExecution.optimizedPlan.stats.sizeInBytes
 
   test("round drivers: every state after init is a checkpoint; the cap fails loudly") {
     val states = Fixpoint.states(Seq(0L).toDF("x"), rounds = 5)(
@@ -27,6 +41,9 @@ class FixpointSpec extends SparkSpec {
     assert(states.map(_.as[Long].head()) === (0L to 5L))
     assert(states.indices.filter(i =>
       states(i).queryExecution.logical.isInstanceOf[LogicalRDD]) === (1 to 5))
+    // every state keeps the initial state's estimate
+    val joined = Fixpoint.states(Seq((1L, 1L), (2L, 2L)).toDF("k", "v"), rounds = 3)(selfJoin)
+    assert(joined.map(estimate).distinct === Seq(estimate(joined.head)))
     val rounds = scala.collection.mutable.ArrayBuffer.empty[Int]
     assert(Fixpoint.converge("probe", 7, raise = "maxProbe") { r =>
       rounds += r; r == 5

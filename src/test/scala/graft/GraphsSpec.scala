@@ -624,17 +624,11 @@ class GraphsSpec extends SparkSpec {
         () => Graphs.pageRank(path(10), iters = 5).collect()),
       ("label propagation", () => Graphs.labelPropagation(path(10), iters = 2).collect(),
         () => Graphs.labelPropagation(path(10), iters = 5).collect()))
-    // AQE's runtime conversion of a join to a broadcast takes as build
-    // side the shuffle stage that finished first, a race between stages
-    // rather than a property of the round: off here, so the plans are the
-    // ones graft's estimates choose
-    val fresh = withConfs("spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1") {
-      ops.map { case (name, first, more) =>
-        first()
-        val before = compiles
-        more()
-        name -> (compiles - before)
-      }
+    val fresh = ops.map { case (name, first, more) =>
+      first()
+      val before = compiles
+      more()
+      name -> (compiles - before)
     }
     assert(fresh.forall(_._2 == 0L), s"classes compiled by the longer run: $fresh")
   }
